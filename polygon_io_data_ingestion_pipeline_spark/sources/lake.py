@@ -20,6 +20,10 @@ manifest/walk file selection 80-147, thread-pooled reads 284-304):
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import operator
+import weakref
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,20 +69,74 @@ def read_lake(
     ``end`` given as a bare date is promoted to end-of-day-inclusive
     (lake_io.py:175-178). Mixed per-file schemas are tolerated via
     mergeSchema (lake_io.py:440-455).
+
+    The merged schema is cached per session, lake path and the session
+    confs that shape parquet schema inference, together with a
+    fingerprint of the file listing it was merged from (sorted file
+    paths + total bytes). While the listing is unchanged, a read reuses
+    the schema and starts no footer-reading job; any added, removed,
+    renamed or resized file re-merges. One limit: a non-Spark writer
+    that rewrites a file in place under the same name AND at the same
+    total byte count is not detected (Spark's commit protocol never
+    does this — every write job gets fresh file names).
     """
-    df = spark.read.option("mergeSchema", True).parquet(path)
+    df = _read_merged(spark, path)
+    preds = []
     if tickers is not None:
-        df = df.filter(F.col("ticker").isin(sorted({t.strip().upper() for t in tickers})))
+        preds.append(F.col("ticker").isin(sorted({t.strip().upper() for t in tickers})))
     if start is not None:
-        df = df.filter(F.col("datetime") >= F.to_timestamp(F.lit(start)))
+        preds.append(F.col("datetime") >= F.to_timestamp(F.lit(start)))
     if end is not None:
         bound = F.to_timestamp(F.lit(end))
         if len(str(end)) <= 10:  # date-only -> inclusive through 23:59:59.999999
             bound = bound + F.expr("INTERVAL 1 DAY") - F.expr("INTERVAL 1 MICROSECOND")
-        df = df.filter(F.col("datetime") <= bound)
+        preds.append(F.col("datetime") <= bound)
+    if preds:  # one filter, one analysis pass
+        df = df.filter(functools.reduce(operator.and_, preds))
     if columns is not None:
         want = [c for c in columns if c in df.columns]  # wanted ∩ available
         df = df.select(*want)
+    return df
+
+
+# Session confs that change what parquet schema inference returns for
+# the same files; each is part of a cached schema's key.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+# session -> {(path, conf values): (merged schema, listing fingerprint)};
+# bounded by the distinct lake paths a session reads, gone with the session.
+_SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing_fingerprint(df: DataFrame) -> tuple[str, int]:
+    """Digest of the sorted file paths plus the file index's total bytes —
+    two driver-side calls over the listing the read already made."""
+    files = "\n".join(sorted(df.inputFiles()))
+    size = df._jdf.queryExecution().analyzed().relation().location().sizeInBytes()
+    return hashlib.sha256(files.encode()).hexdigest(), int(size)
+
+
+def _read_merged(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.option("mergeSchema", True).parquet(path)`` without
+    re-merging footers while the lake's file listing is unchanged: a
+    cached schema is read with ``.schema(...)`` (lists files, starts no
+    job) and kept only if the new listing's fingerprint matches the one
+    it was merged from."""
+    entries = _SCHEMA_CACHE.setdefault(spark, {})
+    key = (path, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    hit = entries.get(key)
+    if hit is not None:
+        schema, fingerprint = hit
+        df = spark.read.schema(schema).parquet(path)
+        if _listing_fingerprint(df) == fingerprint:
+            return df
+    df = spark.read.option("mergeSchema", True).parquet(path)
+    entries[key] = (df.schema, _listing_fingerprint(df))
     return df
 
 

@@ -25,6 +25,7 @@ SPLIT_TO_SA = {
     "close_split": "close_sa",
     "volume_split": "volume_sa",
 }
+_SA_TO_SPLIT = {sa: split for split, sa in SPLIT_TO_SA.items()}
 BASE_COLS = ("datetime", "ticker", "open", "high", "low", "close", "volume", "vwap")
 ADJ_COLS = ("open_sa", "high_sa", "low_sa", "close_sa", "vwap_sa", "volume_sa", "close_tr")
 
@@ -55,27 +56,23 @@ def join_series(un: DataFrame, ad: DataFrame, tf: str) -> DataFrame:
     (lake_io.py:500-506), on exact timestamp for minute (509-511).
     Exposed separately so the join semantics are oracle-testable
     without lake directories."""
-    for src, dst in SPLIT_TO_SA.items():
-        if dst not in ad.columns and src in ad.columns:
-            ad = ad.withColumn(dst, F.col(src))
-
-    left = un.select(*[c for c in BASE_COLS if c in un.columns])
+    have = set(ad.columns)
+    adj = []  # ADJ_COLS order; a missing *_sa column comes from its *_split source
+    for c in ADJ_COLS:
+        if c in have:
+            adj.append(F.col(c))
+        elif _SA_TO_SPLIT.get(c) in have:
+            adj.append(F.col(_SA_TO_SPLIT[c]).alias(c))
+    base = [c for c in BASE_COLS if c in un.columns]
     if tf == "day":
-        left = left.withColumn("__d", F.to_date("datetime"))
-        right = ad.select(
-            F.to_date("datetime").alias("__d"),
-            F.col("ticker").alias("__t"),
-            *[c for c in ADJ_COLS if c in ad.columns],
-        )
+        left = un.select(*base, F.to_date("datetime").alias("__d"))
+        right = ad.select(F.to_date("datetime").alias("__d"), F.col("ticker").alias("__t"), *adj)
         out = left.join(
             right, (left["__d"] == right["__d"]) & (left["ticker"] == right["__t"]), "left"
         ).drop("__d", "__t")
     else:
-        right = ad.select(
-            F.col("datetime").alias("__dt"),
-            F.col("ticker").alias("__t"),
-            *[c for c in ADJ_COLS if c in ad.columns],
-        )
+        left = un.select(*base)
+        right = ad.select(F.col("datetime").alias("__dt"), F.col("ticker").alias("__t"), *adj)
         out = left.join(
             right, (left["datetime"] == right["__dt"]) & (left["ticker"] == right["__t"]), "left"
         ).drop("__dt", "__t")

@@ -95,7 +95,6 @@ SLOW_MODULES = {
     "test_neardup_recall",
     "test_knn_join_recall",
     "test_minute_path",
-    "test_series_cli",
     "test_zorder_lake",
     "test_diff_property",
     "test_merge_property",
@@ -112,7 +111,6 @@ SLOW_MODULES = {
     "test_corpus_exact_history",
     "test_corpus_index_stream",
     "test_ingest_lake",
-    "test_compact_lake",
     "test_rollup_stream",
     "test_corpus_neardup_stream",
     "test_superset_claims",
