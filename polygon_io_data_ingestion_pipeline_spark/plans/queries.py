@@ -1269,8 +1269,8 @@ def _ivf_query_state(
     size), so a changed corpus builds a NEW index dir; reuse requires
     the codebook sidecar — the LAST artifact written, so a torn build
     leaves none and is rewritten (Spark's `_SUCCESS` marker is
-    deliberately not consulted: committer config such as dynamic
-    partitionOverwriteMode omits it). The in-process
+    deliberately not consulted: committer config such as a dynamic
+    partitionOverwriteMode session conf omits it). The in-process
     memo additionally skips the codebook / query-vector collects on
     repeat queries."""
     statsig = _corpus_statsig(sf)
@@ -1290,9 +1290,9 @@ def _ivf_query_state(
     # build that died at any earlier point leaves no sidecar and is
     # rewritten. Deliberately NOT gated on Spark's _SUCCESS marker:
     # whether that file appears depends on session committer config
-    # (dynamic partitionOverwriteMode — which sources/lake.py enables —
-    # omits it), and requiring it made every reuse probe in such
-    # sessions silently rebuild the index (caught by
+    # (a host session that sets partitionOverwriteMode=dynamic omits
+    # it), and requiring it made every reuse probe in such sessions
+    # silently rebuild the index (caught by
     # tests/test_ivf_rebuild_signature.py in the full suite).
     if os.path.exists(os.path.join(idx, "_codebook.json")):
         cents = SIM.read_ivf_codebook(idx)

@@ -38,22 +38,29 @@ def write_lake(df: DataFrame, path: str, tf: str = "day", mode: str = "overwrite
     """Write bars as a partitioned zstd parquet lake, one sorted file
     per partition."""
     keys = PARTITION_KEYS[tf]
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # Partition keys lead the sort: FileFormatWriter requires its input
-    # ordered by the partition columns and would otherwise insert its
-    # own (non-stable) sort, destroying the in-file datetime order.
+    # Dynamic overwrite is a writer option, not a session conf: later
+    # static overwrites in the same session must stay static.
     (
-        df.repartition(*[F.col(k) for k in keys])
-        .sortWithinPartitions(*[F.col(k) for k in keys], "datetime")
+        _lake_layout(df, keys)
         .write.partitionBy(*keys)
         .option("compression", "zstd")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(mode)
         .parquet(path)
     )
     # Overwrites replace files in place; drop any cached listing of the
     # target so readers in this session don't chase deleted files.
-    spark.catalog.refreshByPath(path)
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def _lake_layout(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One shuffle by the partition keys, each task's rows sorted by the
+    keys then ``datetime``: one sorted file per partition. Partition keys
+    lead the sort: FileFormatWriter requires its input ordered by the
+    partition columns and would otherwise insert its own (non-stable)
+    sort, destroying the in-file datetime order."""
+    cols = [F.col(k) for k in keys]
+    return df.repartition(*cols).sortWithinPartitions(*cols, "datetime")
 
 
 def read_lake(
@@ -263,13 +270,11 @@ def compact_lake(
             this = c if this is None else (this & c)
         cond = this if cond is None else (cond | this)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
-        df.filter(cond)
-        .repartition(*[F.col(k) for k in keys])
-        .sortWithinPartitions(*[F.col(k) for k in keys], "datetime")
+        _lake_layout(df.filter(cond), keys)
         .write.partitionBy(*keys)
         .option("compression", "zstd")
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .mode("overwrite")
         .parquet(path)

@@ -45,19 +45,35 @@ def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: s
     and a corrected upstream file re-delivers keys the lake already
     holds. A plain append duplicates both. Here the sink:
 
-    1. collects the batch's touched partition tuples (O(#partitions in
-       the micro-batch) driver memory — bounded, tiny);
-    2. reads ONLY those partitions back from the lake (exact OR-of-ANDs
-       partition filter → partition-pruned scan) and eagerly
-       ``localCheckpoint``\\ s them, truncating lineage so Spark permits
-       overwriting the path it was read from, and bounding the
-       materialized footprint to the touched partitions, not the lake;
-    3. unions existing + incoming and keeps ONE row per ``BAR_KEY``,
-       incoming rows winning over lake rows, with a deterministic
-       value-column tiebreak so a replay reproduces the lake exactly;
-    4. dynamic-partition-overwrites just the touched partitions via
+    1. persists the batch, so its source files are decoded once: the
+       touched-partition collect below fills the cache and the write
+       reads from it (released in a ``finally``, also when the lease or
+       the write raises);
+    2. collects the batch's touched partition tuples (O(#partitions in
+       the micro-batch) driver memory — bounded, tiny) and, under the
+       lake's maintenance lease, checks whether any of their
+       directories exists, resolved with the writer's own partition
+       path naming (escaping, ``__HIVE_DEFAULT_PARTITION__`` for null);
+    3. only if one does, reads those partitions back from the lake
+       (exact OR-of-ANDs partition filter → partition-pruned scan) and
+       eagerly ``localCheckpoint``\\ s them, truncating lineage so
+       Spark permits overwriting the path it was read from, and
+       bounding the materialized footprint to the touched partitions,
+       not the lake. Dynamic overwrite replaces only directories of
+       exactly those names, so a batch of brand-new partitions has
+       nothing to read back: its files carry the batch's own columns,
+       like the first batch's;
+    4. clusters existing + incoming by the partition keys once and keeps
+       ONE row per bar (window over the partition keys + ``datetime``;
+       the date keys are functions of ``datetime``, so the same rows as
+       keying by ``BAR_KEY``), incoming rows winning over lake rows,
+       with a deterministic value-column tiebreak so a replay
+       reproduces the lake exactly;
+    5. dynamic-partition-overwrites just the touched partitions via
        :func:`write_lake` — same layout, sort, and codec as batch
-       ingest, so stream and batch backfills interleave freely.
+       ingest, so stream and batch backfills interleave freely. The
+       clustering and the window's sort already satisfy the writer's
+       repartition and sort, so dedup and write share one shuffle.
 
     Net contract: exactly-once by overwrite at partition granularity;
     late data == recomputed partition, exactly like the reference's
@@ -67,18 +83,19 @@ def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: s
     """
     keys = PARTITION_KEYS[tf]
     spark = batch_df.sparkSession
-    incoming = batch_df
-    touched = incoming.select(*keys).distinct().collect()
-    if not touched:
-        return
-
-    # Null-safe OR-of-ANDs (shared with delete/merge) and the whole
-    # read-merge-overwrite under the lake's maintenance lease: a
-    # compaction interleaving between this sink's lake read and its
-    # partition overwrite would otherwise race it for the same files.
-    part_filter = _partition_filter(touched, keys)
-    with LakeLease(spark, lake_path, holder="ingest_stream"):
-        _write_ingest_batch_locked(incoming, part_filter, lake_path, tf)
+    batch_df.persist()
+    try:
+        touched = batch_df.select(*keys).distinct().collect()
+        if not touched:
+            return
+        # The whole read-merge-overwrite runs under the lake's maintenance
+        # lease: a compaction interleaving between this sink's lake read
+        # and its partition overwrite would otherwise race it for the
+        # same files.
+        with LakeLease(spark, lake_path, holder="ingest_stream"):
+            _write_ingest_batch_locked(batch_df, touched, lake_path, tf)
+    finally:
+        batch_df.unpersist()
 
 
 def merge_keep_incoming(
@@ -96,14 +113,21 @@ def merge_keep_incoming(
     (emit_split_backfill_cmds.py:29) — factored out of the foreachBatch
     sink so the registry query ``events_ingest_merge_keep_last`` can
     hash-verify the exact resolution window the stream runs."""
-    key = list(key)
+    return _keep_first(_tagged_union(existing, incoming), list(key))
+
+
+def _tagged_union(existing: DataFrame | None, incoming: DataFrame) -> DataFrame:
+    """``existing`` ∪ ``incoming`` by name, each row tagged ``__src``
+    (1 = incoming, 0 = lake)."""
     inc = incoming.withColumn("__src", F.lit(1))
     if existing is None:
-        merged = inc
-    else:
-        merged = existing.withColumn("__src", F.lit(0)).unionByName(
-            inc, allowMissingColumns=True
-        )
+        return inc
+    return existing.withColumn("__src", F.lit(0)).unionByName(inc, allowMissingColumns=True)
+
+
+def _keep_first(merged: DataFrame, key: list[str]) -> DataFrame:
+    """One row per ``key`` from a :func:`_tagged_union`: highest
+    ``__src`` first, then every non-key value column descending."""
     tiebreak = [
         F.col(c).desc_nulls_last()
         for c in sorted(merged.columns)
@@ -117,18 +141,42 @@ def merge_keep_incoming(
     )
 
 
-def _write_ingest_batch_locked(incoming, part_filter, lake_path: str, tf: str) -> None:
+def _write_ingest_batch_locked(incoming: DataFrame, touched, lake_path: str, tf: str) -> None:
     spark = incoming.sparkSession
-    try:
-        existing = (
-            spark.read.option("mergeSchema", True)
-            .parquet(lake_path)
-            .filter(part_filter)
-            .localCheckpoint(eager=True)
-        )
-    except AnalysisException:  # first batch: no lake yet
-        existing = None
-    write_lake(merge_keep_incoming(existing, incoming, BAR_KEY), lake_path, tf=tf)
+    keys = PARTITION_KEYS[tf]
+    existing = None
+    if _any_partition_exists(spark, lake_path, touched, keys):
+        try:
+            existing = (
+                spark.read.option("mergeSchema", True)
+                .parquet(lake_path)
+                .filter(_partition_filter(touched, keys))
+                .localCheckpoint(eager=True)
+            )
+        except AnalysisException:  # directories, but no data file anywhere in the lake
+            existing = None
+    # Hash-clustered by exactly the keys write_lake repartitions by, so its
+    # exchange is dropped as redundant; the window's sort (partition keys,
+    # then datetime) covers write_lake's sortWithinPartitions too.
+    union = _tagged_union(existing, incoming).repartition(*[F.col(k) for k in keys])
+    write_lake(_keep_first(union, [*keys, "datetime"]), lake_path, tf=tf)
+
+
+def _any_partition_exists(spark: SparkSession, lake_path: str, touched, keys: list[str]) -> bool:
+    """Whether the lake holds a directory for any of the ``touched``
+    partition tuples, named as the parquet writer names them
+    (``ExternalCatalogUtils.getPartitionPathString``: escaped values,
+    null as ``__HIVE_DEFAULT_PARTITION__``) and checked through the
+    Hadoop FileSystem API, so any scheme works."""
+    jvm = spark._jvm
+    part_path = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+    root = jvm.org.apache.hadoop.fs.Path(lake_path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    for row in touched:
+        rel = "/".join(part_path(k, None if row[k] is None else str(row[k])) for k in keys)
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(root, rel)):
+            return True
+    return False
 
 
 def stream_ingest_bars(

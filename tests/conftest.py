@@ -110,11 +110,9 @@ SLOW_MODULES = {
     "test_corpus_stream",
     "test_corpus_exact_history",
     "test_corpus_index_stream",
-    "test_ingest_lake",
     "test_rollup_stream",
     "test_corpus_neardup_stream",
     "test_superset_claims",
-    "test_lake_lease",
 }
 
 

@@ -1,0 +1,244 @@
+"""The streaming ingest sink's per-batch work: a batch of brand-new
+partitions reads nothing back, corrections and replays still merge
+keep-incoming (also under escaped and null partition values), the
+batch's cache is always released, dedup and write share one shuffle,
+and no lake writer flips the session's partition overwrite mode.
+"""
+
+from __future__ import annotations
+
+import glob
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+from polygon_io_data_ingestion_pipeline_spark.plans.lint import plan_text
+from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
+    PARTITION_KEYS,
+    _lake_layout,
+    _partition_filter,
+    compact_lake,
+    read_lake,
+    write_lake,
+)
+from polygon_io_data_ingestion_pipeline_spark.streaming import ingest_stream
+from polygon_io_data_ingestion_pipeline_spark.streaming.ingest_stream import (
+    BAR_KEY,
+    merge_keep_incoming,
+    write_ingest_batch,
+)
+
+SCHEMA = "ticker string, ts string, close double, volume long"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _bars(spark, rows, vwap: bool = False):
+    """Minute bars shaped like ``normalize_bar_frame`` output:
+    ``rows`` are (ticker, 'YYYY-MM-DD HH:MM:SS', close, volume)."""
+    df = spark.createDataFrame(rows, SCHEMA).withColumn("datetime", F.to_timestamp("ts"))
+    if vwap:
+        df = df.withColumn("vwap", F.col("close") + F.lit(0.5))
+    ntz = F.expr("CAST(datetime AS TIMESTAMP_NTZ)")
+    return (
+        df.drop("ts")
+        .withColumn("year", F.year(ntz))
+        .withColumn("month", F.month(ntz))
+        .withColumn("day", F.dayofmonth(ntz))
+    )
+
+
+def _day(ticker, day, close=10.0, minutes=3):
+    return [(ticker, f"2024-01-{day:02d} 14:{m:02d}:00", close + m, 100 + m) for m in range(minutes)]
+
+
+def _rows(spark, lake):
+    df = read_lake(spark, lake)
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
+
+
+def _stage_names(spark, group: str) -> list[str]:
+    st = spark.sparkContext.statusTracker()
+    return [
+        st.getStageInfo(s).name
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+
+
+def _read_back_stages(spark, group: str, batch, lake) -> list[str]:
+    """Run the sink under job group ``group``; return the names of the
+    stages of the lake read-back (footer merge and localCheckpoint)."""
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        write_ingest_batch(batch, 0, lake, tf="minute")
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    return [
+        n for n in _stage_names(spark, group)
+        if n.startswith(("parquet at ", "localCheckpoint at "))
+    ]
+
+
+def test_new_partition_batch_starts_no_read_back_job(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
+
+    new_day = _bars(spark, _day("AAPL", 3) + _day("MSFT", 3))
+    assert _read_back_stages(spark, "sink-new-day", new_day, lake) == []
+    # the control: a correction to an existing partition does read back
+    fix = _bars(spark, [("AAPL", "2024-01-03 14:00:00", 99.0, 1)])
+    assert _read_back_stages(spark, "sink-correction", fix, lake)
+    assert len(_rows(spark, lake)) == 12
+
+
+def test_correction_replay_and_mixed_batches_keep_incoming(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    first = _bars(spark, _day("AAPL", 2) + _day("MSFT", 2))
+    write_ingest_batch(first, 0, lake, tf="minute")
+    assert not first.storageLevel.useMemory and not first.storageLevel.useDisk  # released
+    rows0 = _rows(spark, lake)
+    write_ingest_batch(first, 0, lake, tf="minute")  # replay
+    assert _rows(spark, lake) == rows0
+
+    fix = _bars(spark, [("AAPL", "2024-01-02 14:01:00", 99.0, 7)])
+    write_ingest_batch(fix, 1, lake, tf="minute")
+    after = read_lake(spark, lake)
+    assert after.count() == 6
+    got = after.filter("ticker = 'AAPL' AND minute(datetime) = 1").collect()
+    assert [(r["close"], r["volume"]) for r in got] == [(99.0, 7)]
+
+    # one row corrects an existing partition, one opens a new one
+    mixed = _bars(
+        spark, [("MSFT", "2024-01-02 14:02:00", 55.0, 5), ("MSFT", "2024-01-04 14:00:00", 56.0, 6)]
+    )
+    write_ingest_batch(mixed, 2, lake, tf="minute")
+    after = read_lake(spark, lake)
+    assert after.count() == 7
+    msft = {(str(r["datetime"]), r["close"]) for r in after.filter("ticker = 'MSFT'").collect()}
+    assert ("2024-01-02 14:02:00", 55.0) in msft and ("2024-01-04 14:00:00", 56.0) in msft
+    assert ("2024-01-02 14:00:00", 10.0) in msft  # untouched row of a touched partition
+    rows1 = _rows(spark, lake)
+    write_ingest_batch(mixed, 2, lake, tf="minute")  # replay of the mixed batch
+    assert _rows(spark, lake) == rows1
+
+
+@pytest.mark.parametrize("ticker", ["BRK/A", None], ids=["escaped", "null"])
+def test_correction_to_escaped_partition_replaces_rows(spark, tmp_path, ticker):
+    """The existence check must name the directory as the writer does
+    (``ticker=BRK%2FA``, ``ticker=__HIVE_DEFAULT_PARTITION__``); a miss
+    would skip the read-back and overwrite the partition with the
+    correction alone."""
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day(ticker, 2)), 0, lake, tf="minute")
+    assert len(glob.glob(f"{lake}/ticker=*/year=2024/month=1/day=2/*.parquet")) == 1
+
+    fix = _bars(spark, [(ticker, "2024-01-02 14:01:00", 99.0, 7)])
+    write_ingest_batch(fix, 1, lake, tf="minute")
+    got = sorted((str(r["datetime"]), r["close"]) for r in read_lake(spark, lake).collect())
+    assert got == [
+        ("2024-01-02 14:00:00", 10.0),
+        ("2024-01-02 14:01:00", 99.0),
+        ("2024-01-02 14:02:00", 12.0),
+    ]
+
+
+def _pre_change_sink(batch, lake, tf):
+    """The sink as it was before the read-back became conditional:
+    always a whole-lake mergeSchema read of the touched partitions."""
+    spark = batch.sparkSession
+    keys = PARTITION_KEYS[tf]
+    touched = batch.select(*keys).distinct().collect()
+    existing = (
+        spark.read.option("mergeSchema", True)
+        .parquet(lake)
+        .filter(_partition_filter(touched, keys))
+        .localCheckpoint(eager=True)
+    )
+    write_lake(merge_keep_incoming(existing, batch, BAR_KEY), lake, tf=tf)
+
+
+def test_new_partition_on_mixed_schema_lake_reads_like_before(spark, tmp_path):
+    """Files of a brand-new partition carry the batch's columns, not the
+    lake's merged schema; mergeSchema readers still see the same rows
+    and the same columns (``vwap`` null for the new rows)."""
+    new, ref = str(tmp_path / "new"), str(tmp_path / "ref")
+    old = _bars(spark, _day("AAPL", 2) + _day("MSFT", 2), vwap=True)
+    batch = _bars(spark, _day("AAPL", 3) + _day("NVDA", 3))
+    for lake in (new, ref):
+        write_ingest_batch(old, 0, lake, tf="minute")
+    write_ingest_batch(batch, 1, new, tf="minute")
+    _pre_change_sink(batch, ref, "minute")
+
+    assert set(read_lake(spark, new).columns) == set(read_lake(spark, ref).columns)
+    assert "vwap" in read_lake(spark, new).columns
+    assert _rows(spark, new) == _rows(spark, ref)
+    assert len(_rows(spark, new)) == 12
+
+
+def test_batch_unpersisted_when_lease_raises(spark, tmp_path, monkeypatch):
+    batch = _bars(spark, _day("AAPL", 2))
+    seen = []
+
+    class FailingLease:
+        def __init__(self, *args, **kwargs):
+            pass
+
+        def __enter__(self):
+            seen.append(batch.storageLevel.useMemory)
+            raise TimeoutError("lease held")
+
+        def __exit__(self, *exc):
+            return False
+
+    monkeypatch.setattr(ingest_stream, "LakeLease", FailingLease)
+    with pytest.raises(TimeoutError):
+        write_ingest_batch(batch, 0, str(tmp_path / "lake"), tf="minute")
+    assert seen == [True]  # cached while the sink ran
+    assert not batch.storageLevel.useMemory and not batch.storageLevel.useDisk
+
+
+def _exchanges(text: str) -> list[str]:
+    return [n for n in re.findall(r"^\(\d+\) (\w+)", text, flags=re.M) if n.endswith("Exchange")]
+
+
+@pytest.mark.parametrize("correction", [False, True], ids=["new-partition", "correction"])
+def test_sink_write_plan_has_one_exchange(spark, tmp_path, monkeypatch, correction):
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
+    plans = []
+
+    def spy(df, path, tf="day", mode="overwrite"):
+        plans.append(plan_text(_lake_layout(df, PARTITION_KEYS[tf])))
+        write_lake(df, path, tf=tf, mode=mode)
+
+    monkeypatch.setattr(ingest_stream, "write_lake", spy)
+    day = 2 if correction else 3
+    fix = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7)])
+    write_ingest_batch(fix, 1, lake, tf="minute")
+    assert len(plans) == 1
+    assert _exchanges(plans[0]) == ["Exchange"], plans[0]
+    assert len(_rows(spark, lake)) == (3 if correction else 4)
+
+
+def test_lake_writers_leave_partition_overwrite_mode_alone(spark, tmp_path):
+    prev = spark.conf.get(OVERWRITE_MODE)
+    spark.conf.set(OVERWRITE_MODE, "static")
+    try:
+        lake = str(tmp_path / "lake")
+        write_lake(_bars(spark, _day("AAPL", 2)), lake, tf="minute")
+        write_lake(_bars(spark, _day("AAPL", 3)), lake, tf="minute")  # dynamic: day 2 kept
+        write_ingest_batch(_bars(spark, _day("MSFT", 2)), 0, lake, tf="minute")
+        compact_lake(spark, lake, tf="minute")
+        assert spark.conf.get(OVERWRITE_MODE) == "static"
+        assert len(_rows(spark, lake)) == 9
+
+        # a later plain overwrite in the session replaces the whole directory
+        out = str(tmp_path / "out")
+        spark.range(4).withColumn("p", F.col("id") % 2).write.partitionBy("p").parquet(out)
+        spark.range(2).withColumn("p", F.lit(0)).write.mode("overwrite").partitionBy("p").parquet(out)
+        assert not glob.glob(f"{out}/p=1")
+        assert spark.read.parquet(out).count() == 2
+    finally:
+        spark.conf.set(OVERWRITE_MODE, prev)

@@ -54,8 +54,9 @@ def test_stale_snapshot_overwrite_silently_loses_concurrent_rows(spark, tmp_path
     assert spark.read.parquet(lake).filter(F.col("doc_id") == 99).count() == 1
 
     # A completes its rewrite of src0 from the stale snapshot
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    snap.write.mode("overwrite").partitionBy("source").parquet(lake)
+    snap.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "source"
+    ).parquet(lake)
     spark.catalog.refreshByPath(lake)
 
     # B's committed row is gone — silently
