@@ -2,14 +2,9 @@ from .asof import asof_join
 from .windows import cumprod, normalize_to_last
 from .factors import (
     adjust_bars,
-    apply_dividend_factors,
-    apply_split_factors,
     attach_id,
-    build_dividend_factors,
-    build_split_factors,
     prep_dividends,
     prep_splits,
-    renormalize_tr,
 )
 from .gaps import (
     day_edges,
@@ -29,14 +24,9 @@ __all__ = [
     "cumprod",
     "normalize_to_last",
     "adjust_bars",
-    "apply_dividend_factors",
-    "apply_split_factors",
     "attach_id",
-    "build_dividend_factors",
-    "build_split_factors",
     "prep_dividends",
     "prep_splits",
-    "renormalize_tr",
     "day_edges",
     "guess_split_ratio",
     "infer_gap_ratios",

@@ -24,7 +24,7 @@ Conventions preserved exactly (SURVEY.md §7.4):
   unadjusted (factor == 1.0 on the last row);
 - same-day splits multiply, same-day dividends sum;
 - the dividend growth factor uses the **prior trading day's**
-  split-adjusted close when ``use_split_base``;
+  split-adjusted close;
 - events dated after an id's last trading day are dropped by the
   forward as-of alignment;
 - NOTE one deliberate deviation: the reference's forward snap
@@ -36,12 +36,18 @@ Conventions preserved exactly (SURVEY.md §7.4):
   results differ from the reference only for events dated on
   non-trading days, where the reference loses the adjustment;
 - event-id fallback: an id with no FIGI-keyed events falls back to
-  ticker-keyed events.
+  ticker-keyed events;
+- NOTE a second deliberate deviation: a split row whose ratio is not
+  positive (``split_from`` or ``split_to`` <= 0, or a given ``ratio``
+  <= 0) is ignored, like a row with a NULL ratio. The reference's
+  pandas path turns such a row into inf, zero or NaN factors across the
+  security's history, and under Spark's ANSI mode the unguarded
+  division would fail the whole adjust with DIVIDE_BY_ZERO.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .asof import asof_join
@@ -55,19 +61,27 @@ OHLC = ("open", "high", "low")
 # ---------------------------------------------------------------------------
 
 
+def split_ratio(split_from: Column, split_to: Column) -> Column:
+    """``split_to / split_from`` as a double; NULL unless both sides are
+    positive (a zero ``split_from`` must not reach the ANSI divide)."""
+    sf, st = split_from.cast("double"), split_to.cast("double")
+    return F.when((sf > 0) & (st > 0), st / sf)
+
+
 def prep_splits(splits: DataFrame) -> DataFrame:
     """Normalize a splits table to (execution_date, ratio, ticker,
-    composite_figi, event_id)."""
+    composite_figi, event_id). A ratio that is not positive becomes
+    NULL, so event alignment ignores the row (``cumprod`` needs a
+    strictly positive input)."""
     s = splits
     if "ratio" not in s.columns and {"split_from", "split_to"} <= set(s.columns):
-        s = s.withColumn(
-            "ratio", F.col("split_to").cast("double") / F.col("split_from").cast("double")
-        )
+        s = s.withColumn("ratio", split_ratio(F.col("split_from"), F.col("split_to")))
     if "composite_figi" not in s.columns:
         s = s.withColumn("composite_figi", F.lit(None).cast("string"))
+    ratio = F.col("ratio").cast("double")
     return s.select(
         F.to_date("execution_date").alias("execution_date"),
-        F.col("ratio").cast("double").alias("ratio"),
+        F.when(ratio > 0, ratio).alias("ratio"),
         F.upper(F.trim(F.col("ticker"))).alias("ticker"),
         "composite_figi",
         F.coalesce(
@@ -125,7 +139,7 @@ def _statically_empty(df: DataFrame) -> bool:
     return all("LocalRelation <empty>" in ln or "Range (0, 0" in ln for ln in leaves)
 
 
-def attach_id(bars: DataFrame, security_master: DataFrame, probe_empty: bool = True) -> DataFrame:
+def attach_id(bars: DataFrame, security_master: DataFrame) -> DataFrame:
     """Attach the point-in-time entity id to each bar.
 
     Broadcast left join on ticker, then the validity-window predicate
@@ -133,19 +147,18 @@ def attach_id(bars: DataFrame, security_master: DataFrame, probe_empty: bool = T
     rows with a null window survive), keep-last dedup per (ticker,
     datetime), and the ``NOFIGI__<TICKER>`` fallback.
 
-    ``probe_empty`` checks the dimension at plan-build time to take a
-    no-join fast path when it's empty: first structurally (an optimized
-    plan that is a ``LocalRelation <empty>`` / zero-row ``Range`` costs
-    zero jobs to recognize — and ``isEmpty`` on an EMPTY many-partition
-    frame is the worst case of ``take(1)``'s scale-up rounds, measured
-    seconds of empty tasks), then via ``isEmpty`` (a broadcast-sized
-    table: one footer read). Pass ``False`` to keep plan construction
-    fully action-free.
+    The dimension is probed at plan-build time to take a no-join fast
+    path when it's empty: first structurally (an optimized plan that is
+    a ``LocalRelation <empty>`` / zero-row ``Range`` costs zero jobs to
+    recognize — and ``isEmpty`` on an EMPTY many-partition frame is the
+    worst case of ``take(1)``'s scale-up rounds, measured seconds of
+    empty tasks), then via ``isEmpty`` (a broadcast-sized table: one
+    footer read).
     """
     px_base = bars.withColumn("ticker", F.upper(F.trim(F.col("ticker")))).withColumn(
         "event_day", F.to_date("datetime")
     )
-    if probe_empty and (_statically_empty(security_master) or security_master.isEmpty()):
+    if _statically_empty(security_master) or security_master.isEmpty():
         # no dimension -> every row falls through to the NOFIGI identity;
         # skip the join and the keep-last window entirely (two shuffles)
         return px_base.withColumn(
@@ -200,18 +213,6 @@ def _events_for_ids(ids: DataFrame, events: DataFrame, date_col: str, value_col:
     return by_id.unionByName(by_ticker)
 
 
-def _align_forward(events: DataFrame, calendar: DataFrame, date_col: str, value_col: str) -> DataFrame:
-    """Snap each event date to the id's next observed trading day
-    (forward as-of, exact allowed; unmatched events drop)."""
-    left = events.select("id", F.col(date_col).alias("anchor"), value_col)
-    right = calendar.select("id", F.col("event_day").alias("anchor"))
-    aligned = asof_join(
-        left, right, on="anchor", by="id", direction="forward",
-        allow_exact_matches=True, right_prefix="day_", how="inner",
-    )
-    return aligned.select("id", F.col("day_anchor").alias("event_day"), value_col)
-
-
 # ---------------------------------------------------------------------------
 # Factor builders
 # ---------------------------------------------------------------------------
@@ -251,117 +252,21 @@ def day_calendar(bars_with_id: DataFrame) -> DataFrame:
     )
 
 
-def _split_factors_for_days(days: DataFrame, ids: DataFrame, splits: DataFrame) -> DataFrame:
-    """Split-factor math over an (id, event_day) calendar (already
-    distinct) and an (id, ticker) event-routing table."""
-    ev = _events_for_ids(ids, splits, "execution_date", "ratio")
-    aligned = _align_forward(ev, days, "execution_date", "ratio")
-    per_day = aligned.groupBy("id", "event_day").agg(F.product("ratio").alias("ratio"))
-    e = days.join(per_day, ["id", "event_day"], "left").na.fill({"ratio": 1.0})
-    w = Window.partitionBy("id").orderBy("event_day")
-    e = e.withColumn("F", cumprod(F.col("ratio"), w))
-    e = e.withColumn("split_price_factor", normalize_to_last(F.col("F"), w))
-    return e.select(
-        "id",
-        "event_day",
-        "split_price_factor",
-        (F.lit(1.0) / F.col("split_price_factor")).alias("split_volume_factor"),
-    )
+def dividend_growth(amount: Column, prior_base: Column) -> Column:
+    """Per-day TR growth factor ``(prior_base - amount) / prior_base``,
+    1.0 where there is no dividend or no positive prior base.
 
-
-def build_split_factors(bars_with_id: DataFrame, splits: DataFrame) -> DataFrame:
-    """(id, event_day, split_price_factor, split_volume_factor) over each
-    id's full trading calendar.
-
-    Same-day ratios multiply (A1); F = running product over the
-    calendar; price factor = F / F_last (1.0 on the last day), volume
-    factor is its reciprocal (factor_builder.py:269-276).
-    """
-    # Two independent distincts straight off the bar table (not a
-    # distinct-of-distinct chain: each is one shuffle, and the id/ticker
-    # one is tiny — one row per listed security).
-    return _split_factors_for_days(
-        bars_with_id.select("id", "event_day").distinct(),
-        bars_with_id.select("id", "ticker").distinct(),
-        splits,
-    )
-
-
-def apply_split_factors(bars_with_id: DataFrame, factors: DataFrame) -> DataFrame:
-    """Left join on (id, event_day), default 1.0, materialize *_split
-    columns (factor_builder.py:419-428)."""
-    m = bars_with_id.join(factors, ["id", "event_day"], "left").na.fill(
-        {"split_price_factor": 1.0, "split_volume_factor": 1.0}
-    )
-    m = m.withColumn("close_split", F.col("close") * F.col("split_price_factor")).withColumn(
-        "volume_split", F.col("volume") * F.col("split_volume_factor")
-    )
-    for c in OHLC:
-        if c in bars_with_id.columns:
-            m = m.withColumn(f"{c}_split", F.col(c) * F.col("split_price_factor"))
-    return m
-
-
-def build_dividend_factors(
-    bars_split: DataFrame, dividends: DataFrame, use_split_base: bool = True
-) -> DataFrame:
-    """(id, event_day, tr_price_factor): total-return factor from cash
-    dividends against the prior trading day's (split-adjusted) close.
-
-    g = (prior_base - amount) / prior_base on dividend days (guarded
-    prior_base > 0), else 1.0; G = running product; factor = G / G_last
-    (factor_builder.py:291-348).
-
-    Scale shape (round 14): the end-of-day aggregate reuses
-    :func:`day_calendar`'s two-level form — the full-bar pass is a
-    partial-combining HashAggregate (``first(ticker)``'s string buffer
-    would otherwise force a spill-prone full-table SortAggregate), and
-    the calendar is ``localCheckpoint``-materialized because FOUR
-    downstream legs consume it (event routing probes it three times via
-    ``_events_for_ids``, alignment once, the growth join once); lazy,
-    the optimizer additionally prunes the routing leg down to a bare
-    ``first(ticker)``-over-scan SortAggregate again. One full-bar pass
-    total, everything after it calendar-sized. NOTE: building the frame
-    therefore launches the calendar job eagerly-on-first-action (the
-    repo-wide localCheckpoint idiom).
-    """
-    base_col = "close_split" if use_split_base and "close_split" in bars_split.columns else "close"
-    wday = Window.partitionBy("id").orderBy("event_day")
-    cal = (
-        day_calendar(bars_split.withColumn("close", F.col(base_col)))
-        .withColumnRenamed("close_eod", "base")
-        .localCheckpoint(eager=False)
-    )
-    cal2 = cal.withColumn("prior_base", F.lag("base").over(wday))
-    ev = _events_for_ids(cal.select("id", "ticker").distinct(), dividends, "ex_date", "amount")
-    aligned = _align_forward(ev, cal.select("id", "event_day"), "ex_date", "amount")
-    per_day = aligned.groupBy("id", "event_day").agg(F.sum("amount").alias("amount"))
-    t = cal2.join(per_day, ["id", "event_day"], "left")
-    # Reference parity (factor_builder.py:897-899): the mask is only
-    # amount/prior_base non-null and prior_base > 0 — a dividend >= the
-    # prior close yields g <= 0 and propagates through the cumprod, as
-    # in the reference. Safe here because cumprod is F.product-based
-    # (a g <= 0 day flips/zeroes later factors identically on both
-    # sides; the old exp(sum(log)) formulation would have NULLed it).
-    g = F.when(
-        F.col("amount").isNotNull()
-        & F.col("prior_base").isNotNull()
-        & (F.col("prior_base") > 0),
-        (F.col("prior_base") - F.col("amount")) / F.col("prior_base"),
+    Same mask as the reference (factor_builder.py:897-899): only
+    amount/prior_base non-null and prior_base > 0. A dividend >= the
+    prior close yields g <= 0, which propagates through the
+    ``F.product``-based cumprod exactly as pandas ``cumprod`` does."""
+    return F.when(
+        amount.isNotNull() & prior_base.isNotNull() & (prior_base > 0),
+        (prior_base - amount) / prior_base,
     ).otherwise(F.lit(1.0))
-    t = t.withColumn("G", cumprod(g, wday))
-    return t.select(
-        "id", "event_day", normalize_to_last(F.col("G"), wday).alias("tr_price_factor")
-    )
 
 
-def _day_factors_fused(
-    cal: DataFrame,
-    splits: DataFrame,
-    dividends: DataFrame,
-    use_split_base: bool,
-    renormalize: bool,
-) -> DataFrame:
+def _day_factors_fused(cal: DataFrame, splits: DataFrame, dividends: DataFrame) -> DataFrame:
     """(id, event_day, split_price_factor, split_volume_factor,
     tr_price_factor) over the day calendar, computed in ONE window pass.
 
@@ -369,22 +274,18 @@ def _day_factors_fused(
     batch renormalization are all per-id windows over the SAME
     (id ordered by event_day) calendar, and the TR math consumes the
     split math row-by-row (base = close_eod · spf) — composing them as
-    separate helpers cost one calendar exchange + sort per stage (split
+    separate steps costs one calendar exchange + sort per step (split
     cumprod, TR cumprod after a join back, renorm after another join),
     ~6 calendar-sized exchanges.  Stacked as expressions over one
     WindowSpec they share a single exchange + sort, and the two
     event-alignment as-of passes (splits, dividends) collapse into one
     union-typed pass against the same calendar.
 
-    Bit-identical to the old chain
-    (``_split_factors_for_days`` → ``_dividend_factors_for_days`` →
-    join → renorm window): every arithmetic step multiplies/divides the
-    same doubles in the same order; only the plan shape changes.
     NULL bookkeeping of the fused per-day event table: ``product`` /
     ``sum`` skip NULLs, so a dividend-only day carries ratio NULL
-    (filled 1.0 — exactly the old left-join miss) and a split-only day
-    carries amount NULL (the growth mask's ``isNotNull`` branch — same
-    as the old missing dividend row).
+    (filled 1.0, as a day without splits) and a split-only day carries
+    amount NULL (the growth mask's ``isNotNull`` branch, as a day
+    without dividends).
     """
     days = cal.select("id", "event_day")
     ids = cal.select("id", "ticker").distinct()
@@ -421,41 +322,20 @@ def _day_factors_fused(
     w = Window.partitionBy("id").orderBy("event_day")
     e = e.withColumn("_F", cumprod(F.col("ratio"), w))
     e = e.withColumn("split_price_factor", normalize_to_last(F.col("_F"), w))
-    base = (
-        F.col("close_eod") * F.col("split_price_factor")
-        if use_split_base
-        else F.col("close_eod")
-    )
-    e = e.withColumn("base", base).withColumn(
+    e = e.withColumn("base", F.col("close_eod") * F.col("split_price_factor")).withColumn(
         "prior_base", F.lag("base").over(w)
     )
-    # Same mask as the reference (factor_builder.py:897-899): g <= 0
-    # from an oversized dividend propagates through the F.product cumprod.
-    g = F.when(
-        F.col("amount").isNotNull()
-        & F.col("prior_base").isNotNull()
-        & (F.col("prior_base") > 0),
-        (F.col("prior_base") - F.col("amount")) / F.col("prior_base"),
-    ).otherwise(F.lit(1.0))
+    g = dividend_growth(F.col("amount"), F.col("prior_base"))
     e = e.withColumn("_G", cumprod(g, w))
     e = e.withColumn("tr_price_factor", normalize_to_last(F.col("_G"), w))
-    if renormalize:
-        # Batch re-anchor at day level (factor_builder.py:440-455):
-        # the last bar by datetime IS the last day's end-of-day row,
-        # so last(close_tr)/last(base) over the bars equals
-        # last(base * trf)/last(base) over the calendar.
-        wall = w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        renorm = F.last(F.col("base") * F.col("tr_price_factor")).over(
-            wall
-        ) / F.last("base").over(wall)
-        renorm = F.when(renorm.isNull() | (renorm == 0), F.lit(1.0)).otherwise(
-            renorm
-        )
-        e = e.withColumn(
-            "tr_price_factor", F.col("tr_price_factor") / renorm
-        )
+    # Batch re-anchor at day level (factor_builder.py:440-455): the last
+    # bar by datetime IS the last day's end-of-day row, so
+    # last(close_tr)/last(base) over the bars equals
+    # last(base * trf)/last(base) over the calendar.
+    wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    renorm = F.last(F.col("base") * F.col("tr_price_factor")).over(wall) / F.last("base").over(wall)
+    renorm = F.when(renorm.isNull() | (renorm == 0), F.lit(1.0)).otherwise(renorm)
+    e = e.withColumn("tr_price_factor", F.col("tr_price_factor") / renorm)
     return e.select(
         "id",
         "event_day",
@@ -463,64 +343,6 @@ def _day_factors_fused(
         (F.lit(1.0) / F.col("split_price_factor")).alias("split_volume_factor"),
         "tr_price_factor",
     )
-
-
-def apply_dividend_factors(
-    bars_split: DataFrame, factors: DataFrame, use_split_base: bool = True
-) -> DataFrame:
-    """Left join on (id, event_day), default 1.0, materialize *_tr
-    columns (factor_builder.py:430-438)."""
-    base_col = "close_split" if use_split_base and "close_split" in bars_split.columns else "close"
-    m = bars_split.join(factors, ["id", "event_day"], "left").na.fill({"tr_price_factor": 1.0})
-    m = m.withColumn("close_tr", F.col(base_col) * F.col("tr_price_factor"))
-    for c in OHLC:
-        if f"{c}_split" in m.columns:
-            m = m.withColumn(f"{c}_tr", F.col(f"{c}_split") * F.col("tr_price_factor"))
-    return m
-
-
-def id_renorm_factors(bars_tr: DataFrame, base_col: str) -> DataFrame:
-    """Per-id re-anchor ratios (id, __renorm): final close_tr over final
-    base close, via ``max_by`` partial aggregation.
-
-    This is the factor engine's one full-table computation keyed by id
-    ALONE, so it is where a hot key bites at 100 TB: the previous
-    whole-partition window (``F.last().over(partitionBy(id))``)
-    serialized a security holding half the corpus into a single task.
-    A map-side-combining aggregate reduces every partition's slice of
-    the hot id to ONE row before the shuffle, so skew costs nothing —
-    and the result is an O(#ids) frame the caller broadcasts back
-    (tests/test_factor_skew.py pins both the plan shape and equality
-    with the window formulation on a 50%-hot-key fixture)."""
-    agg = bars_tr.groupBy("id").agg(
-        F.max_by("close_tr", "datetime").alias("__last_tr"),
-        F.max_by(base_col, "datetime").alias("__last_base"),
-    )
-    renorm = F.col("__last_tr") / F.col("__last_base")
-    renorm = F.when(renorm.isNull() | (renorm == 0), F.lit(1.0)).otherwise(renorm)
-    return agg.select("id", renorm.alias("__renorm"))
-
-
-def renormalize_tr(bars_tr: DataFrame, use_split_base: bool = True) -> DataFrame:
-    """Batch-mode re-anchor: scale each id's TR factor so the final
-    close_tr equals the final base close (factor_builder.py:440-455).
-
-    Skew-safe shape: the per-id anchor values come from
-    :func:`id_renorm_factors` (partial aggregation, not a
-    whole-partition window) and join back as a broadcast — the bar
-    table is never shuffled on the bare id key."""
-    base_col = "close_split" if use_split_base and "close_split" in bars_tr.columns else "close"
-    renorm = id_renorm_factors(bars_tr, base_col)
-    out = bars_tr.join(F.broadcast(renorm), "id", "left")
-    out = out.withColumn(
-        "tr_price_factor",
-        F.col("tr_price_factor") / F.coalesce(F.col("__renorm"), F.lit(1.0)),
-    ).drop("__renorm")
-    out = out.withColumn("close_tr", F.col(base_col) * F.col("tr_price_factor"))
-    for c in OHLC:
-        if f"{c}_split" in out.columns:
-            out = out.withColumn(f"{c}_tr", F.col(f"{c}_split") * F.col("tr_price_factor"))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -543,9 +365,6 @@ def adjust_bars(
     splits: DataFrame,
     dividends: DataFrame,
     materialize: str = "ohlc",
-    use_split_base: bool = True,
-    renormalize: bool = True,
-    persist_intermediates: bool = True,
 ) -> DataFrame:
     """Unadjusted bars + refdata -> adjusted bars (the reference's batch
     path, factor_builder.py:1125-1162, as a single linear plan).
@@ -565,15 +384,14 @@ def adjust_bars(
     the batch renormalization stack over a single id-keyed
     exchange+sort, and both event types align in one as-of pass — see
     :func:`_day_factors_fused`); round 13 measured the unfused chain
-    stage-latency-bound at 44 stages.
-
-    Results are bit-identical to chaining the public single-step
-    operators (build/apply split -> build/apply dividend ->
-    renormalize_tr): the end-of-day base picks the same ``max_by``
-    row, and the per-row ``close * spf`` / ``base * (trf / renorm)``
-    multiplies happen in the same order. ``tests/test_factors.py``
-    pins this against an independent pandas oracle, and the
+    stage-latency-bound at 44 stages. ``tests/test_factors.py`` pins the
+    result against an independent pandas oracle, and the
     ``corporate_actions_adjust`` DuckDB oracle hash-verifies it.
+
+    The TR base is the split-adjusted close and TR factors are batch
+    re-anchored (the reference's batch conventions). A split-only
+    caller passes an empty dividends frame: ``tr_price_factor`` is then
+    1.0 and ``close_tr == close_split``.
 
     One nuance: event routing (FIGI-keyed with ticker fallback) takes
     its (id, ticker) pairs from the day calendar — one ticker per
@@ -581,52 +399,35 @@ def adjust_bars(
     ticker changes identity mid-day, which the reference (whole files
     per ticker-day) cannot express either.
 
-    ``persist_intermediates`` pins ONLY the day calendar — the one
-    frame that is both multi-consumer (three downstream reads) and
-    expensive to recompute (each recompute is a full-table aggregate).
-    The id-stitched bars are deliberately NOT cached: they are consumed
-    twice (calendar + final join), but each consumption is a map-only
-    scan-and-stitch — at 100 TB you rescan that, you don't cache it —
-    and the day-level factor frames are cheap to recompute from the
-    cached calendar. (Measured at sf0.1: pinning everything costs 3×
-    the wall clock of pinning just the calendar, because cached plans
-    fragment whole-stage codegen; see also
-    ``canChangeCachedPlanOutputPartitioning`` in session.py.)
+    Only the day calendar is pinned: it is the one frame that is both
+    multi-consumer (three downstream reads) and expensive to recompute
+    (a full-table aggregate). The id-stitched bars are consumed twice
+    (calendar + final join) but each consumption is a map-only
+    scan-and-stitch, and the day-level factor frames are cheap to
+    recompute from the pinned calendar. (Measured at sf0.1: pinning
+    everything costs 3× the wall clock of pinning just the calendar.)
+    The pin is a ``localCheckpoint(eager=False)``: it adds no
+    CacheManager entry and its blocks are released with the frame, so
+    nothing stays cached for the life of a long-lived session. Under
+    AQE it is only partly lazy: taking the checkpoint's RDD finalizes
+    the adaptive plan, which runs the calendar's shuffle stages when
+    ``adjust_bars`` is called; the calendar's last stage runs with the
+    first action, and later actions on the returned frame reuse it.
     """
 
     px = attach_id(bars, security_master)
-    cal = day_calendar(px)
-    if persist_intermediates:
-        cal = cal.persist()
-    if dividends is not None:
-        eff = _day_factors_fused(
-            cal, prep_splits(splits), prep_dividends(dividends), use_split_base, renormalize
-        )
-    else:
-        eff = _split_factors_for_days(
-            cal.select("id", "event_day"),
-            cal.select("id", "ticker").distinct(),
-            prep_splits(splits),
-        )
-
+    cal = day_calendar(px).localCheckpoint(eager=False)
+    eff = _day_factors_fused(cal, prep_splits(splits), prep_dividends(dividends))
     out = px.join(eff, ["id", "event_day"], "left").na.fill(
-        {
-            "split_price_factor": 1.0,
-            "split_volume_factor": 1.0,
-            **({"tr_price_factor": 1.0} if dividends is not None else {}),
-        }
+        {"split_price_factor": 1.0, "split_volume_factor": 1.0, "tr_price_factor": 1.0}
     )
     out = out.withColumn("close_split", F.col("close") * F.col("split_price_factor")).withColumn(
         "volume_split", F.col("volume") * F.col("split_volume_factor")
     )
+    out = out.withColumn("close_tr", F.col("close_split") * F.col("tr_price_factor"))
     for c in OHLC:
         if c in px.columns:
             out = out.withColumn(f"{c}_split", F.col(c) * F.col("split_price_factor"))
-    if dividends is not None:
-        base_col = "close_split" if use_split_base else "close"
-        out = out.withColumn("close_tr", F.col(base_col) * F.col("tr_price_factor"))
-        for c in OHLC:
-            if f"{c}_split" in out.columns:
-                out = out.withColumn(f"{c}_tr", F.col(f"{c}_split") * F.col("tr_price_factor"))
+            out = out.withColumn(f"{c}_tr", F.col(f"{c}_split") * F.col("tr_price_factor"))
     cols = [c for c in _MATERIALIZE[materialize] if c in out.columns]
     return out.select(*cols)

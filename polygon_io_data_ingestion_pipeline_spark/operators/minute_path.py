@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .asof import asof_join
-from .factors import attach_id, prep_dividends, prep_splits
+from .factors import attach_id, dividend_growth, prep_dividends, prep_splits
 from .gaps import day_edges, infer_gap_ratios, merge_declared_with_inferred
 from .windows import cumprod, normalize_to_last
 
@@ -127,16 +127,7 @@ def dividend_factors_from_days(
         .agg(F.sum("amount").alias("amount"))
     )
     t = base.join(per_day, ["ticker", "event_day"], "left")
-    # Same mask as the reference (factor_builder.py:897-899): g <= 0
-    # from an oversized dividend propagates through the F.product
-    # cumprod, mirroring pandas cumprod exactly (see factors.py).
-    g = F.when(
-        F.col("amount").isNotNull()
-        & F.col("prior_base").isNotNull()
-        & (F.col("prior_base") > 0),
-        (F.col("prior_base") - F.col("amount")) / F.col("prior_base"),
-    ).otherwise(F.lit(1.0))
-    t = t.withColumn("G", cumprod(g, w))
+    t = t.withColumn("G", cumprod(dividend_growth(F.col("amount"), F.col("prior_base")), w))
     return t.select(
         "ticker", "event_day", normalize_to_last(F.col("G"), w).alias("tr_price_factor")
     )
@@ -213,7 +204,6 @@ def adjust_minute_bars(
     materialize: str = "ohlc",
     use_split_base: bool = True,
     detect_gaps: bool = True,
-    persist_intermediates: bool = True,
     split_factors: DataFrame | None = None,
     div_factors: DataFrame | None = None,
 ) -> DataFrame:
@@ -227,21 +217,23 @@ def adjust_minute_bars(
     where the ±1-day fallback genuinely fires, when the two lakes'
     day keys are offset.
 
+    The id-stitched minutes, the day edges and the split factors each
+    feed several downstream legs, so each is pinned with
+    ``localCheckpoint(eager=False)``: no CacheManager entry, blocks
+    released with the frame. Under AQE their shuffle stages run when
+    this function is called (see ``adjust_bars``).
+
     Returns the adjusted frame (write it with
     ``sources.lake.write_lake`` for the partitioned layout).
     """
-
-    def pin(df: DataFrame) -> DataFrame:
-        return df.persist() if persist_intermediates else df
-
-    px = pin(attach_id(minute_bars, security_master))
-    edges = pin(day_edges(px))
+    px = attach_id(minute_bars, security_master).localCheckpoint(eager=False)
+    edges = day_edges(px).localCheckpoint(eager=False)
     days = edges.select("ticker", "event_day")  # already distinct per group
     sf = split_factors
     if sf is None:
-        sf = pin(
-            split_factors_from_days(days, prep_splits(splits), edges, detect_gaps)
-        )
+        sf = split_factors_from_days(
+            days, prep_splits(splits), edges, detect_gaps
+        ).localCheckpoint(eager=False)
     gf = div_factors
     if gf is None:
         gf = dividend_factors_from_days(

@@ -101,10 +101,9 @@ def load_events(
     splits = _norm_date(splits.withColumn("ticker", F.upper("ticker")), SPLIT_DATE_ALIASES, "execution_date")
     divs = _norm_date(divs.withColumn("ticker", F.upper("ticker")), DIV_DATE_ALIASES, "ex_date")
     if "ratio" not in splits.columns and {"split_from", "split_to"} <= set(splits.columns):
-        sf_, st_ = F.col("split_from").cast("double"), F.col("split_to").cast("double")
-        splits = splits.withColumn(
-            "ratio", F.when((sf_ > 0) & st_.isNotNull(), st_ / sf_)
-        )
+        from ..operators.factors import split_ratio
+
+        splits = splits.withColumn("ratio", split_ratio(F.col("split_from"), F.col("split_to")))
     if tickers is not None:
         keys = sorted({t.strip().upper() for t in tickers})
         splits = splits.filter(F.col("ticker").isin(keys))
@@ -141,7 +140,7 @@ def backfill_split_windows(
     dividends: DataFrame,
     new_splits: DataFrame,
     window_days: int = 14,
-    **adjust_kwargs,
+    materialize: str = "ohlc",
 ) -> DataFrame:
     """Recompute adjusted bars only for tickers with new split events —
     the reference's ±window backfill job (emit_split_backfill_cmds.py).
@@ -151,7 +150,8 @@ def backfill_split_windows(
     affected tickers are fully re-adjusted, then the output is
     restricted to the ±window around each new event — matching the
     reference's re-emitted date windows, ready for dynamic partition
-    overwrite.
+    overwrite. ``materialize`` picks the adjusted column set, as in
+    ``adjust_bars``.
     """
     from ..operators.factors import adjust_bars, prep_splits
 
@@ -160,7 +160,7 @@ def backfill_split_windows(
     )
     affected = ev.select("ticker").distinct()
     scoped = bars.join(F.broadcast(affected), "ticker", "left_semi")
-    adjusted = adjust_bars(scoped, security_master, splits, dividends, **adjust_kwargs)
+    adjusted = adjust_bars(scoped, security_master, splits, dividends, materialize=materialize)
     in_window = adjusted.join(
         F.broadcast(ev),
         (adjusted["ticker"] == ev["ticker"])

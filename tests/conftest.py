@@ -83,7 +83,6 @@ SLOW_MODULES = {
     "test_pdf_hash2b_restatement",
     "test_archive_sources",
     "test_ivf_rebuild_signature",
-    "test_dividend_factor_agg",
     "test_crawl_stream",
     # pre-round-14 set
     "test_oracle_parity",

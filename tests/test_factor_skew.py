@@ -1,16 +1,12 @@
 """Hot-key evidence for the factor engine: one security holding ~50%
-of all bars must neither change results nor force a single-task
-full-corpus window.
+of all bars must not change ``adjust_bars``' results.
 
-At 100 TB the adjust pipeline's per-id windows only ever run on
-day-calendar/event-sized tables (small); the sole full-bar-table
-computation keyed by the bare id is the batch re-anchor, which is why
-it is aggregation-shaped (map-side combine absorbs the hot key) rather
-than window-shaped. These tests pin (a) result equality between the
-aggregation shape and the reference window formulation on a skewed
-fixture, (b) end-to-end adjust correctness under skew, and (c) the
-plan shape: partial HashAggregate + broadcast join-back, no Window
-over the bar lineage keyed by id alone.
+The pipeline touches the bar table only through keys that spread a hot
+security: the day-calendar ``groupBy(id, event_day)`` (map-side partial
+aggregation) and the factor-application join on (id, event_day). Every
+per-id window, the batch re-anchor included, runs on the day calendar,
+whose partitions are bounded by trading days per security, not by bar
+count.
 """
 
 from __future__ import annotations
@@ -18,19 +14,9 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from polygon_io_data_ingestion_pipeline_spark.operators.factors import (
-    adjust_bars,
-    id_renorm_factors,
-    renormalize_tr,
-)
-
-BARS_SCHEMA = (
-    "datetime timestamp, ticker string, id long, close double, volume double"
-)
-
+from polygon_io_data_ingestion_pipeline_spark.operators.factors import adjust_bars
 
 @pytest.fixture(scope="module")
 def skewed_bars(spark):
@@ -56,72 +42,10 @@ def skewed_bars(spark):
     return hot.unionByName(cold).localCheckpoint()
 
 
-def _with_tr(bars):
-    """Minimal bars_tr frame: a fake tr factor column to re-anchor."""
-    return bars.withColumn("tr_price_factor", 1.0 + (F.col("id") % 3) / 10.0).withColumn(
-        "close_tr", F.col("close") * F.col("tr_price_factor")
-    )
-
-
-def test_renormalize_agg_equals_window_formulation(spark, skewed_bars):
-    """The aggregation-shaped re-anchor must reproduce the reference
-    window formulation exactly on the skewed fixture."""
-    bars_tr = _with_tr(skewed_bars)
-
-    got = renormalize_tr(bars_tr, use_split_base=False)
-
-    w = Window.partitionBy("id").orderBy("datetime").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    renorm = F.last("close_tr").over(w) / F.last("close").over(w)
-    renorm = F.when(renorm.isNull() | (renorm == 0), F.lit(1.0)).otherwise(renorm)
-    want = bars_tr.withColumn(
-        "tr_price_factor", F.col("tr_price_factor") / renorm
-    ).withColumn("close_tr", F.col("close") * F.col("tr_price_factor"))
-
-    cols = ["id", "datetime", "tr_price_factor", "close_tr"]
-    a = {(r["id"], r["datetime"]): (r["tr_price_factor"], r["close_tr"]) for r in got.select(cols).collect()}
-    b = {(r["id"], r["datetime"]): (r["tr_price_factor"], r["close_tr"]) for r in want.select(cols).collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k][0] == pytest.approx(b[k][0], abs=1e-12)
-        assert a[k][1] == pytest.approx(b[k][1], abs=1e-9)
-    # the anchor: every id's final close_tr equals its final close
-    finals = got.groupBy("id").agg(
-        F.max_by("close_tr", "datetime").alias("tr"),
-        F.max_by("close", "datetime").alias("base"),
-    )
-    for r in finals.collect():
-        assert r["tr"] == pytest.approx(r["base"], rel=1e-12)
-
-
-def test_renorm_plan_is_partial_agg_not_window(spark, skewed_bars):
-    """Plan shape: the per-id anchors come from a HashAggregate with a
-    partial_ mode (map-side combine — the skew absorber) and NO Window
-    operator anywhere in that lineage."""
-    bars_tr = _with_tr(skewed_bars)
-    plan = (
-        id_renorm_factors(bars_tr, "close")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "partial_max_by" in plan or "partial" in plan.lower(), plan
-    assert "Window" not in plan, plan
-    # and the full renormalize joins the tiny frame back as a broadcast
-    full_plan = (
-        renormalize_tr(bars_tr, use_split_base=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in full_plan, full_plan
-    assert "Window" not in full_plan, full_plan
-
-
 def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
     """End-to-end adjust on the skewed fixture: the hot ticker's split
-    applies exactly as on a balanced corpus."""
+    applies exactly as on a balanced corpus, and with no dividends the
+    TR columns equal the split-adjusted ones (the split-only use)."""
     tickers = ["HOT"] + [f"C{i}" for i in range(39)]
     sm = spark.createDataFrame(
         [(t, f"FIGI_{t}", dt.datetime(2023, 1, 1), None) for t in tickers],
@@ -143,7 +67,6 @@ def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
         splits,
         dividends,
         materialize="close",
-        persist_intermediates=False,
     ).collect()
     hot = [r for r in out if r["ticker"] == "HOT"]
     cold = [r for r in out if r["ticker"] != "HOT"]
@@ -156,3 +79,5 @@ def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
         assert r["close_split"] == pytest.approx(want, rel=1e-12), r
     for r in cold[:100]:
         assert r["close_split"] == pytest.approx(r["close"], rel=1e-12)
+    for r in out:
+        assert r["tr_price_factor"] == 1.0 and r["close_tr"] == r["close_split"], r

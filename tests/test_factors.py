@@ -7,7 +7,9 @@ the first bar day (no prior close -> factor 1), two dividends on one
 day (amounts sum), split+dividend on the same day (TR base is the
 split-adjusted prior close), an SCD entity change mid-sample, a ticker
 missing from the security master (NOFIGI fallback), and FIGI-keyed vs
-ticker-keyed events (event-id fallback).
+ticker-keyed events (event-id fallback). Split rows with a
+non-positive ratio are ignored (a documented deviation from the
+reference, which turns them into inf, zero or NaN factors).
 """
 
 from __future__ import annotations
@@ -17,8 +19,10 @@ import datetime as dt
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from polygon_io_data_ingestion_pipeline_spark.operators.factors import adjust_bars
+from polygon_io_data_ingestion_pipeline_spark.operators.factors import adjust_bars, day_calendar
+from polygon_io_data_ingestion_pipeline_spark.sources.lake import write_lake
 
 D = lambda s: dt.datetime.fromisoformat(s)
 
@@ -185,18 +189,15 @@ def _oracle_adjust(bars, sm, splits, divs):
     return pd.concat(out).sort_values(["id", "datetime"]).reset_index(drop=True)
 
 
+def _adjust(spark, bars, sm, splits, divs):
+    got = adjust_bars(*(spark.createDataFrame(f) for f in (bars, sm, splits, divs)))
+    return got.toPandas().sort_values(["id", "datetime"]).reset_index(drop=True)
+
+
 @pytest.fixture(scope="module")
 def adjusted(spark):
-    bars, sm, splits, divs = _fixture_frames()
-    got = adjust_bars(
-        spark.createDataFrame(bars),
-        spark.createDataFrame(sm),
-        spark.createDataFrame(splits),
-        spark.createDataFrame(divs),
-        materialize="ohlc",
-    ).toPandas()
-    want = _oracle_adjust(bars, sm, splits, divs)
-    return got.sort_values(["id", "datetime"]).reset_index(drop=True), want
+    frames = _fixture_frames()
+    return _adjust(spark, *frames), _oracle_adjust(*frames)
 
 
 def test_matches_pandas_oracle(adjusted):
@@ -246,3 +247,75 @@ def test_scd_entity_split(adjusted):
     b1 = got[got["id"] == "FIGI_B1"]["datetime"].max()
     b2 = got[got["id"] == "FIGI_B2"]["datetime"].min()
     assert b1 < b2
+
+
+def test_non_positive_split_rows_are_ignored(spark, adjusted):
+    clean, _ = adjusted
+    bars, sm, splits, divs = _fixture_frames()
+    day = D("2024-01-04T00:00:00")
+    bad = pd.DataFrame(
+        [
+            # split_from = 0: an unguarded ANSI divide raises DIVIDE_BY_ZERO
+            dict(ticker="AAA", composite_figi="FIGI_AAA", execution_date=day,
+                 split_from=0.0, split_to=2.0),
+            # split_to = 0: ratio 0 would zero the cumprod's last value
+            dict(ticker="CCC", composite_figi=None, execution_date=day,
+                 split_from=1.0, split_to=0.0),
+            # FIGI_B2's only FIGI-keyed row: must not block the ticker fallback
+            dict(ticker="BBB", composite_figi="FIGI_B2", execution_date=day,
+                 split_from=0.0, split_to=1.0),
+        ]
+    )
+    got = _adjust(spark, bars, sm, pd.concat([splits, bad], ignore_index=True), divs)
+    pd.testing.assert_frame_equal(got, clean)
+
+    # a given ratio column: ratio <= 0 is ignored the same way
+    ratios = splits.assign(ratio=splits["split_to"] / splits["split_from"]).drop(
+        columns=["split_from", "split_to"]
+    )
+    bad = pd.DataFrame(
+        [
+            dict(ticker="AAA", composite_figi="FIGI_AAA", execution_date=day, ratio=0.0),
+            dict(ticker="CCC", composite_figi=None, execution_date=day, ratio=-2.0),
+        ]
+    )
+    got = _adjust(spark, bars, sm, pd.concat([ratios, bad], ignore_index=True), divs)
+    pd.testing.assert_frame_equal(got, clean)
+
+
+def test_calendar_full_bar_pass_is_hash_shaped(spark):
+    # The one full-bar pass (day_calendar level 1) must be a
+    # partial-combining HashAggregate; the unavoidable first(ticker)
+    # SortAggregate may only appear ABOVE it (calendar-sized, after the
+    # level-1 exchange), never directly over the bar scan.
+    px = (
+        spark.createDataFrame(_fixture_frames()[0])
+        .withColumn("id", F.concat(F.lit("NOFIGI__"), "ticker"))
+        .withColumn("event_day", F.to_date("datetime"))
+        .localCheckpoint()
+    )
+    lines = day_calendar(px)._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert any(
+        "HashAggregate" in l and "partial_max_by" in l for l in lines
+    ), "\n".join(lines)
+    for i, l in enumerate(lines):
+        if "SortAggregate" in l and "partial_first" in l:
+            below = lines[i + 1 :]
+            hash_i = next(
+                j for j, x in enumerate(below) if "HashAggregate" in x
+            )
+            scan_i = next(j for j, x in enumerate(below) if "Scan" in x)
+            assert hash_i < scan_i, "\n".join(lines)
+
+
+def test_adjust_leaves_no_cache_entry(spark, tmp_path):
+    # The day-calendar pin lives and dies with the adjusted frame: no
+    # CacheManager entry outlives writing it in a long-lived session.
+    bars, sm, splits, divs = (spark.createDataFrame(f) for f in _fixture_frames())
+    spark.catalog.clearCache()
+    out = adjust_bars(bars, sm, splits, divs)
+    write_lake(
+        out.withColumn("year", F.year("datetime")).withColumn("month", F.month("datetime")),
+        str(tmp_path / "adjusted"),
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -66,7 +66,6 @@ def test_gap_inferred_split_adjusts_history(spark, minute_bars):
         _splits(spark, []),
         _divs(spark, []),
         materialize="close",
-        persist_intermediates=False,
     ).toPandas().set_index(["ticker", "datetime"]).sort_index()
 
     aaa = out.loc["AAA"]
@@ -97,7 +96,6 @@ def test_declared_split_on_next_day_moves_to_gap_day(spark, minute_bars):
         _splits(spark, [("AAA", D4, 1.0, 2.0)]),
         _divs(spark, []),
         materialize="close",
-        persist_intermediates=False,
     ).toPandas().set_index(["ticker", "datetime"]).sort_index()
     aaa = out.loc["AAA"]
     assert aaa.loc[f"{D2} 09:30:00", "split_price_factor"] == pytest.approx(0.5)
@@ -115,7 +113,6 @@ def test_stream_mode_dividend_factor_uses_prior_eod_base(spark, minute_bars):
         _splits(spark, []),
         _divs(spark, [("AAA", D2, 10.0)]),
         materialize="close",
-        persist_intermediates=False,
     ).toPandas().set_index(["ticker", "datetime"]).sort_index()
     aaa = out.loc["AAA"]
     g = (50.5 - 10.0) / 50.5
@@ -146,7 +143,6 @@ def test_plus_minus_one_day_fallback_for_offset_factor_calendar(spark, minute_ba
         _splits(spark, []),
         _divs(spark, []),
         materialize="close",
-        persist_intermediates=False,
         split_factors=sf,
         div_factors=gf,
     ).toPandas().set_index("datetime").sort_index()
