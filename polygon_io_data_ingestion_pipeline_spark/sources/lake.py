@@ -20,9 +20,8 @@ manifest/walk file selection 80-147, thread-pooled reads 284-304):
 
 from __future__ import annotations
 
-import functools
 import hashlib
-import operator
+import json
 import weakref
 from collections.abc import Iterable
 
@@ -58,9 +57,43 @@ def _lake_layout(df: DataFrame, keys: list[str]) -> DataFrame:
     keys then ``datetime``: one sorted file per partition. Partition keys
     lead the sort: FileFormatWriter requires its input ordered by the
     partition columns and would otherwise insert its own (non-stable)
-    sort, destroying the in-file datetime order."""
-    cols = [F.col(k) for k in keys]
-    return df.repartition(*cols).sortWithinPartitions(*cols, "datetime")
+    sort, destroying the in-file datetime order. ``DISTRIBUTE BY`` /
+    ``SORT BY`` are the same plan nodes as ``repartition`` /
+    ``sortWithinPartitions``, built from one SQL text."""
+    by = ", ".join(map(sql_ident, keys))
+    return df.sparkSession.sql(
+        f"SELECT * FROM {{df}} DISTRIBUTE BY {by} SORT BY {by}, `datetime`", df=df
+    )
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted identifier in a ``spark.sql`` text
+    that has DataFrame placeholders: backticks doubled for SQL, braces
+    doubled for the placeholder formatter."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def lake_where(tickers: Iterable[str] | None, start: str | None, end: str | None) -> tuple[str, dict]:
+    """``read_lake``'s ticker and time filter as a SQL predicate over
+    ``ticker`` and ``datetime`` plus its bound parameters ("" and {} for
+    no filter). Values never enter the text. The tickers are ONE
+    parameter, a JSON array, so a 500-ticker load binds as cheaply as a
+    1-ticker one; the optimizer folds it to a literal array, still a
+    partition filter on ``ticker``."""
+    preds, args = [], {}
+    if tickers is not None:
+        args["tickers"] = json.dumps(sorted({t.strip().upper() for t in tickers}))
+        preds.append("array_contains(from_json(:tickers, 'array<string>'), `ticker`)")
+    if start is not None:
+        args["start"] = start
+        preds.append("`datetime` >= to_timestamp(:start)")
+    if end is not None:
+        args["end"] = end
+        bound = "to_timestamp(:end)"
+        if len(str(end)) <= 10:  # date-only -> inclusive through 23:59:59.999999
+            bound += " + INTERVAL 1 DAY - INTERVAL 1 MICROSECOND"
+        preds.append(f"`datetime` <= {bound}")
+    return " AND ".join(preds), args
 
 
 def read_lake(
@@ -86,24 +119,21 @@ def read_lake(
     that rewrites a file in place under the same name AND at the same
     total byte count is not detected (Spark's commit protocol never
     does this — every write job gets fresh file names).
+
+    Filter and projection are one parameterized SQL statement (see
+    ``lake_where``): one parse and one analysis, and a plan build whose
+    py4j round trips do not grow with the tickers, columns or files.
     """
     df = _read_merged(spark, path)
-    preds = []
-    if tickers is not None:
-        preds.append(F.col("ticker").isin(sorted({t.strip().upper() for t in tickers})))
-    if start is not None:
-        preds.append(F.col("datetime") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        bound = F.to_timestamp(F.lit(end))
-        if len(str(end)) <= 10:  # date-only -> inclusive through 23:59:59.999999
-            bound = bound + F.expr("INTERVAL 1 DAY") - F.expr("INTERVAL 1 MICROSECOND")
-        preds.append(F.col("datetime") <= bound)
-    if preds:  # one filter, one analysis pass
-        df = df.filter(functools.reduce(operator.and_, preds))
+    where, args = lake_where(tickers, start, end)
+    want = None
     if columns is not None:
-        want = [c for c in columns if c in df.columns]  # wanted ∩ available
-        df = df.select(*want)
-    return df
+        have = set(df.columns)
+        want = [sql_ident(c) for c in columns if c in have]  # wanted ∩ available
+    if where or want is not None:
+        where = f" WHERE {where}" if where else ""
+        df = spark.sql(f"SELECT {', '.join(want or ['*'])} FROM {{lake}}{where}", args=args, lake=df)
+    return df.select() if want == [] else df  # no wanted column is available: zero columns
 
 
 # Session confs that change what parquet schema inference returns for
@@ -121,11 +151,16 @@ _SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _listing_fingerprint(df: DataFrame) -> tuple[str, int]:
-    """Digest of the sorted file paths plus the file index's total bytes —
-    two driver-side calls over the listing the read already made."""
-    files = "\n".join(sorted(df.inputFiles()))
-    size = df._jdf.queryExecution().analyzed().relation().location().sizeInBytes()
-    return hashlib.sha256(files.encode()).hexdigest(), int(size)
+    """Digest of the sorted file paths plus the file index's total bytes,
+    over the listing the read already made. The paths cross py4j as ONE
+    string joined on the JVM (NUL never occurs in a path): iterating an
+    ``inputFiles()`` array from Python costs a round trip per file."""
+    index = df._jdf.queryExecution().analyzed().relation().location()
+    # a dotted name resolves in one round trip; jvm.scala.collection... costs one per step
+    array_seq = getattr(df.sparkSession._jvm, "scala.collection.immutable.ArraySeq")
+    files = array_seq.unsafeWrapArray(index.inputFiles()).mkString("\0")
+    files = "\n".join(sorted(files.split("\0")))
+    return hashlib.sha256(files.encode()).hexdigest(), int(index.sizeInBytes())
 
 
 def _read_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -258,20 +293,12 @@ def compact_lake(
             if _os.path.exists(_local(f))
         )
         if r["__nfiles"] > 1 or small:
-            todo.append(tuple(r[k] for k in keys))
+            todo.append(r)
     if not todo:
         return {"partitions_compacted": 0, "files_before": files_before}
 
-    cond = None
-    for vals in todo:
-        this = None
-        for k, v in zip(keys, vals):
-            c = F.col(k) == F.lit(v)
-            this = c if this is None else (this & c)
-        cond = this if cond is None else (cond | this)
-
     (
-        _lake_layout(df.filter(cond), keys)
+        _lake_layout(_only_partitions(df, todo, keys), keys)
         .write.partitionBy(*keys)
         .option("compression", "zstd")
         .option("partitionOverwriteMode", "dynamic")
@@ -402,8 +429,7 @@ def delete_from_lake(
     )
     if not touched:
         return 0
-    part_filter = _partition_filter(touched, partition_cols)
-    affected = lake.filter(part_filter)
+    affected = _only_partitions(lake, touched, partition_cols)
     n_before = affected.count()
     kept = affected.join(F.broadcast(keys), key_col, "left_anti").localCheckpoint()
     n_deleted = n_before - kept.count()
@@ -436,24 +462,28 @@ def delete_from_lake(
     return n_deleted
 
 
-def _partition_filter(rows, partition_cols: list[str]):
-    """OR-of-ANDs Column matching exactly the given partition tuples.
+def _only_partitions(df: DataFrame, rows, partition_cols: list[str]) -> DataFrame:
+    """``df`` restricted to exactly the given partition tuples: one
+    OR-of-ANDs predicate, every value a bound parameter (never SQL
+    text), so it prunes like a literal filter and the values show in
+    the scan's ``PartitionFilters``.
 
     Null-safe equality: a null partition value is written to disk as
-    ``__HIVE_DEFAULT_PARTITION__`` and reads back as NULL — plain ``==``
+    ``__HIVE_DEFAULT_PARTITION__`` and reads back as NULL — plain ``=``
     would never match it, silently skipping that partition in
     delete/merge (the exact "old files survive" failure the delete
-    docstring rules out).  ``eqNullSafe`` matches it like any other
-    value; ``_partition_dirs`` and dynamic overwrite already handle the
-    null directory correctly."""
-    part_filter = None
+    docstring rules out).  ``<=>`` matches it like any other value;
+    ``_partition_dirs`` and dynamic overwrite already handle the null
+    directory correctly."""
+    args, clauses = {}, []
     for row in rows:
-        clause = None
+        terms = []
         for c in partition_cols:
-            cond = F.col(c).eqNullSafe(F.lit(row[c]))
-            clause = cond if clause is None else clause & cond
-        part_filter = clause if part_filter is None else part_filter | clause
-    return part_filter
+            name = f"p{len(args)}"
+            args[name] = row[c]
+            terms.append(f"{sql_ident(c)} <=> :{name}")
+        clauses.append(f"({' AND '.join(terms)})")
+    return df.sparkSession.sql(f"SELECT * FROM {{df}} WHERE {' OR '.join(clauses)}", args=args, df=df)
 
 
 def _partition_dirs(lake: DataFrame, rows, partition_cols: list[str]) -> set[str]:
@@ -464,7 +494,7 @@ def _partition_dirs(lake: DataFrame, rows, partition_cols: list[str]) -> set[str
         return set()
     return {
         r["f"].rsplit("/", 1)[0]
-        for r in lake.filter(_partition_filter(rows, partition_cols))
+        for r in _only_partitions(lake, rows, partition_cols)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
@@ -474,10 +504,10 @@ def _partition_dirs(lake: DataFrame, rows, partition_cols: list[str]) -> set[str
 def _delete_dirs(spark: SparkSession, dirs: set[str]) -> None:
     """Recursively delete directories through the Hadoop FileSystem API —
     works on any scheme (file://, hdfs://, s3a://), not just local."""
+    path_cls, conf = getattr(spark._jvm, "org.apache.hadoop.fs.Path"), spark._jsc.hadoopConfiguration()
     for d in dirs:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(d)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        jpath = path_cls(d)
+        jpath.getFileSystem(conf).delete(jpath, True)
 
 
 def merge_into_lake(
@@ -537,9 +567,8 @@ def merge_into_lake(
     target = updates.select(*partition_cols).distinct().collect()
     if not target:
         return {"rows_updated": 0, "rows_inserted": 0}
-    tgt_filter = _partition_filter(target, partition_cols)
     existing_targets = (
-        lake.filter(tgt_filter).select(*partition_cols).distinct().collect()
+        _only_partitions(lake, target, partition_cols).select(*partition_cols).distinct().collect()
     )
     seen: set[tuple] = set()
     touched = []
@@ -551,7 +580,7 @@ def merge_into_lake(
     n_updated = matched.select(key_col).distinct().count()
     n_inserted = updates.count() - n_updated
     if touched:
-        affected = lake.filter(_partition_filter(touched, partition_cols))
+        affected = _only_partitions(lake, touched, partition_cols)
         survivors = affected.join(F.broadcast(keys), key_col, "left_anti")
         out = survivors.unionByName(updates).localCheckpoint()
     else:

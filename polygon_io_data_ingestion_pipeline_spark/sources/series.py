@@ -15,7 +15,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .lake import read_lake
+from .lake import _read_merged, lake_where, sql_ident
 
 #: factor_builder's *_split columns -> canonical *_sa aliases
 SPLIT_TO_SA = {
@@ -43,11 +43,12 @@ def load_series(
 
     Day granularity joins on the calendar date (lake_io.py:500-506),
     minute on the exact timestamp (509-511); *_split columns are
-    harmonized to *_sa. Both sides are partition-pruned reads.
+    harmonized to *_sa. Both sides are partition-pruned reads, filtered
+    exactly as ``read_lake`` filters them, and the reads, projections
+    and join are one parameterized SQL statement.
     """
-    un = read_lake(spark, unadj_root, tickers=tickers, start=start, end=end)
-    ad = read_lake(spark, adj_root, tickers=tickers, start=start, end=end)
-    return join_series(un, ad, tf)
+    where, args = lake_where(tickers, start, end)
+    return _join_sql(_read_merged(spark, unadj_root), _read_merged(spark, adj_root), tf, where, args)
 
 
 def join_series(un: DataFrame, ad: DataFrame, tf: str) -> DataFrame:
@@ -56,27 +57,31 @@ def join_series(un: DataFrame, ad: DataFrame, tf: str) -> DataFrame:
     (lake_io.py:500-506), on exact timestamp for minute (509-511).
     Exposed separately so the join semantics are oracle-testable
     without lake directories."""
+    return _join_sql(un, ad, tf, "", {})
+
+
+def _join_sql(un: DataFrame, ad: DataFrame, tf: str, where: str, args: dict) -> DataFrame:
+    """``join_series`` of ``un`` and ``ad``, each first filtered by the
+    SQL predicate ``where`` (bound by ``args``), as one statement."""
     have = set(ad.columns)
-    adj = []  # ADJ_COLS order; a missing *_sa column comes from its *_split source
+    adj = {}  # ADJ_COLS order; a missing *_sa column comes from its *_split source
     for c in ADJ_COLS:
-        if c in have:
-            adj.append(F.col(c))
-        elif _SA_TO_SPLIT.get(c) in have:
-            adj.append(F.col(_SA_TO_SPLIT[c]).alias(c))
-    base = [c for c in BASE_COLS if c in un.columns]
-    if tf == "day":
-        left = un.select(*base, F.to_date("datetime").alias("__d"))
-        right = ad.select(F.to_date("datetime").alias("__d"), F.col("ticker").alias("__t"), *adj)
-        out = left.join(
-            right, (left["__d"] == right["__d"]) & (left["ticker"] == right["__t"]), "left"
-        ).drop("__d", "__t")
-    else:
-        left = un.select(*base)
-        right = ad.select(F.col("datetime").alias("__dt"), F.col("ticker").alias("__t"), *adj)
-        out = left.join(
-            right, (left["datetime"] == right["__dt"]) & (left["ticker"] == right["__t"]), "left"
-        ).drop("__dt", "__t")
-    return out
+        src = c if c in have else _SA_TO_SPLIT.get(c)
+        if src in have:
+            adj[sql_ident(c)] = sql_ident(src)
+    base = [sql_ident(c) for c in BASE_COLS if c in un.columns]
+    key = "to_date(`datetime`)" if tf == "day" else "`datetime`"  # calendar date / exact instant
+    filt = f" WHERE {where}" if where else ""
+    return un.sparkSession.sql(
+        f"SELECT {', '.join([f'l.{c}' for c in base] + [f'r.{c}' for c in adj])} "
+        f"FROM (SELECT {', '.join(base)}, {key} AS `__k` FROM {{un}}{filt}) l "
+        f"LEFT JOIN (SELECT {key} AS `__k`, `ticker` AS `__t`"
+        f"{''.join(f', {src} AS {c}' for c, src in adj.items())} FROM {{ad}}{filt}) r "
+        "ON l.`__k` = r.`__k` AND l.`ticker` = r.`__t`",
+        args=args,
+        un=un,
+        ad=ad,
+    )
 
 
 SPLIT_DATE_ALIASES = ("execution_date", "effective_date", "split_date", "date")

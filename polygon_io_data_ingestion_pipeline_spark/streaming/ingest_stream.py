@@ -24,12 +24,12 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.csv_bars import normalize_bar_frame
-from ..sources.lake import PARTITION_KEYS, _partition_filter, write_lake
+from ..sources.lake import PARTITION_KEYS, _only_partitions, sql_ident, write_lake
 from ..sources.lease import LakeLease
 
 #: bar identity: one row per (ticker, instant) — the reference's
@@ -127,17 +127,19 @@ def _tagged_union(existing: DataFrame | None, incoming: DataFrame) -> DataFrame:
 
 def _keep_first(merged: DataFrame, key: list[str]) -> DataFrame:
     """One row per ``key`` from a :func:`_tagged_union`: highest
-    ``__src`` first, then every non-key value column descending."""
-    tiebreak = [
-        F.col(c).desc_nulls_last()
+    ``__src`` first, then every non-key value column descending. The
+    window is one SQL text over the schema's names, not a Column per
+    tiebreak column."""
+    order = ["`__src` DESC"] + [
+        f"{sql_ident(c)} DESC NULLS LAST"
         for c in sorted(merged.columns)
         if c not in key and c != "__src"
     ]
-    w = Window.partitionBy(*key).orderBy(F.col("__src").desc(), *tiebreak)
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
+    return merged.sparkSession.sql(
+        "SELECT * EXCEPT (`__rn`, `__src`) FROM (SELECT *, row_number() OVER ("
+        f"PARTITION BY {', '.join(map(sql_ident, key))} ORDER BY {', '.join(order)}) AS `__rn` "
+        "FROM {merged}) WHERE `__rn` = 1",
+        merged=merged,
     )
 
 
@@ -147,18 +149,15 @@ def _write_ingest_batch_locked(incoming: DataFrame, touched, lake_path: str, tf:
     existing = None
     if _any_partition_exists(spark, lake_path, touched, keys):
         try:
-            existing = (
-                spark.read.option("mergeSchema", True)
-                .parquet(lake_path)
-                .filter(_partition_filter(touched, keys))
-                .localCheckpoint(eager=True)
-            )
+            existing = _only_partitions(
+                spark.read.option("mergeSchema", True).parquet(lake_path), touched, keys
+            ).localCheckpoint(eager=True)
         except AnalysisException:  # directories, but no data file anywhere in the lake
             existing = None
     # Hash-clustered by exactly the keys write_lake repartitions by, so its
     # exchange is dropped as redundant; the window's sort (partition keys,
     # then datetime) covers write_lake's sortWithinPartitions too.
-    union = _tagged_union(existing, incoming).repartition(*[F.col(k) for k in keys])
+    union = _tagged_union(existing, incoming).repartition(*keys)
     write_lake(_keep_first(union, [*keys, "datetime"]), lake_path, tf=tf)
 
 
@@ -168,13 +167,15 @@ def _any_partition_exists(spark: SparkSession, lake_path: str, touched, keys: li
     (``ExternalCatalogUtils.getPartitionPathString``: escaped values,
     null as ``__HIVE_DEFAULT_PARTITION__``) and checked through the
     Hadoop FileSystem API, so any scheme works."""
+    # JVM classes resolved once per call, each by its dotted name in one round trip
     jvm = spark._jvm
-    part_path = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
-    root = jvm.org.apache.hadoop.fs.Path(lake_path)
+    part_path = getattr(jvm, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils").getPartitionPathString
+    path_cls = getattr(jvm, "org.apache.hadoop.fs.Path")
+    root = path_cls(lake_path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     for row in touched:
         rel = "/".join(part_path(k, None if row[k] is None else str(row[k])) for k in keys)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(root, rel)):
+        if fs.exists(path_cls(root, rel)):
             return True
     return False
 

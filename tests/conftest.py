@@ -41,7 +41,6 @@ SLOW_MODULES = {
     "test_datasheet",
     "test_decorrelation",
     "test_dedup_clusters",
-    "test_delete_from_lake",
     "test_diff",
     "test_gaps_rest_media",
     "test_graph_invariants",

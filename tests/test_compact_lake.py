@@ -102,3 +102,20 @@ def test_write_lake_in_file_ordering_with_multi_partition_tasks(spark, tmp_path)
             ).collect()
             ts = [r["datetime"] for r in part]
             assert ts == sorted(ts), (t, m)
+
+
+def test_compact_lake_compacts_a_null_partition(spark, tmp_path):
+    """A null partition value (``ticker=__HIVE_DEFAULT_PARTITION__``)
+    reads back as NULL; the compaction's partition selection is
+    null-safe, so a fragmented null partition is rewritten too."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 2024, 3, 5), lake)  # a typed partition: ticker infers as string
+    for i in range(3):
+        write_lake(_bars(spark, None, 2024, 3, 5, base_minute=i * 5), lake, mode="append")
+    null_dir = os.path.join(lake, "ticker=__HIVE_DEFAULT_PARTITION__", "year=2024", "month=3")
+    assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 3
+    before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
+
+    assert compact_lake(spark, lake)["partitions_compacted"] == 2  # AAA's one file is small
+    assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 1
+    assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before

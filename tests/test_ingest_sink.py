@@ -7,7 +7,9 @@ and no lake writer flips the session's partition overwrite mode.
 
 from __future__ import annotations
 
+import functools
 import glob
+import operator
 import re
 
 import pytest
@@ -17,7 +19,6 @@ from polygon_io_data_ingestion_pipeline_spark.plans.lint import plan_text
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
     PARTITION_KEYS,
     _lake_layout,
-    _partition_filter,
     compact_lake,
     read_lake,
     write_lake,
@@ -146,14 +147,19 @@ def test_correction_to_escaped_partition_replaces_rows(spark, tmp_path, ticker):
 
 def _pre_change_sink(batch, lake, tf):
     """The sink as it was before the read-back became conditional:
-    always a whole-lake mergeSchema read of the touched partitions."""
+    always a whole-lake mergeSchema read of the touched partitions
+    (selected by a Column-API OR-of-ANDs of null-safe equalities)."""
     spark = batch.sparkSession
     keys = PARTITION_KEYS[tf]
     touched = batch.select(*keys).distinct().collect()
+    part_filter = functools.reduce(operator.or_, [
+        functools.reduce(operator.and_, [F.col(c).eqNullSafe(F.lit(row[c])) for c in keys])
+        for row in touched
+    ])
     existing = (
         spark.read.option("mergeSchema", True)
         .parquet(lake)
-        .filter(_partition_filter(touched, keys))
+        .filter(part_filter)
         .localCheckpoint(eager=True)
     )
     write_lake(merge_keep_incoming(existing, batch, BAR_KEY), lake, tf=tf)
