@@ -409,10 +409,8 @@ def delete_from_lake(
     tests) — at 100 TB a deletion of k documents costs the partitions
     they live in, not the lake. Returns the number of rows deleted.
 
-    Same machinery as the streaming sink's merge-overwrite
-    (streaming/ingest_stream.py write_ingest_batch); deletion is the
-    subtractive case.  Serialized behind the lake's maintenance lease
-    (``lease=False`` opts out when the caller already holds it).
+    Serialized behind the lake's maintenance lease (``lease=False``
+    opts out when the caller already holds it).
     """
     if lease:
         with LakeLease(spark, path, holder="delete_from_lake", ttl_sec=3600.0):

@@ -95,7 +95,6 @@ SLOW_MODULES = {
     "test_minute_path",
     "test_zorder_lake",
     "test_diff_property",
-    "test_merge_property",
     "test_funnel",
     "test_funnel_stream",
     "test_pagerank",

@@ -1,8 +1,10 @@
 """The streaming ingest sink's per-batch work: a batch of brand-new
-partitions reads nothing back, corrections and replays still merge
-keep-incoming (also under escaped and null partition values), the
-batch's cache is always released, dedup and write share one shuffle,
-and no lake writer flips the session's partition overwrite mode.
+partitions is staged and published by rename without reading the lake,
+corrections and replays still merge keep-incoming (also under escaped
+and null partition values) while reading back only the partitions they
+touch, failures leave no staging behind and replay to the one-shot
+result, dedup and write share one shuffle, and no lake writer flips the
+session's partition overwrite mode.
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from __future__ import annotations
 import functools
 import glob
 import operator
+import os
 import re
 
 import pytest
@@ -26,6 +29,7 @@ from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
 from polygon_io_data_ingestion_pipeline_spark.streaming import ingest_stream
 from polygon_io_data_ingestion_pipeline_spark.streaming.ingest_stream import (
     BAR_KEY,
+    STAGING,
     merge_keep_incoming,
     write_ingest_batch,
 )
@@ -58,47 +62,56 @@ def _rows(spark, lake):
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
 
 
-def _stage_names(spark, group: str) -> list[str]:
-    st = spark.sparkContext.statusTracker()
-    return [
-        st.getStageInfo(s).name
-        for j in st.getJobIdsForGroup(group)
-        for s in st.getJobInfo(j).stageIds
-        if st.getStageInfo(s) is not None
-    ]
+def _files(lake) -> dict[str, tuple[int, int]]:
+    """Every file under ``lake``: relative path -> (size, mtime_ns)."""
+    out = {}
+    for d, _, names in os.walk(lake):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.relpath(os.path.join(d, n), lake)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
-def _read_back_stages(spark, group: str, batch, lake) -> list[str]:
-    """Run the sink under job group ``group``; return the names of the
-    stages of the lake read-back (footer merge and localCheckpoint)."""
+def _sink_jobs(spark, group: str, batch, lake) -> tuple[int, list[str]]:
+    """Run the sink under job group ``group``; return its job count and
+    the names of its lake read-back stages (the footer merge)."""
     spark.sparkContext.setJobGroup(group, group)
     try:
         write_ingest_batch(batch, 0, lake, tf="minute")
     finally:
         spark.sparkContext._jsc.clearJobGroup()
-    return [
-        n for n in _stage_names(spark, group)
-        if n.startswith(("parquet at ", "localCheckpoint at "))
+    st = spark.sparkContext.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    names = [
+        st.getStageInfo(s).name
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
     ]
+    return len(jobs), [n for n in names if n.startswith("parquet at ")]
 
 
 def test_new_partition_batch_starts_no_read_back_job(spark, tmp_path):
+    """A new-day batch is one shuffle + one write (the sink used to start
+    5 jobs: a cached collect of the touched keys came first); a
+    correction adds the footer merge over the touched leaves and the
+    merge write (it used to start 6-7)."""
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
 
-    new_day = _bars(spark, _day("AAPL", 3) + _day("MSFT", 3))
-    assert _read_back_stages(spark, "sink-new-day", new_day, lake) == []
-    # the control: a correction to an existing partition does read back
+    jobs, read_back = _sink_jobs(spark, "sink-new-day", _bars(spark, _day("AAPL", 3) + _day("MSFT", 3)), lake)
+    assert jobs <= 2 and read_back == []
     fix = _bars(spark, [("AAPL", "2024-01-03 14:00:00", 99.0, 1)])
-    assert _read_back_stages(spark, "sink-correction", fix, lake)
+    jobs, read_back = _sink_jobs(spark, "sink-correction", fix, lake)
+    assert jobs <= 5 and read_back  # the control: a correction does read back
     assert len(_rows(spark, lake)) == 12
+    assert not os.path.exists(f"{lake}/{STAGING}")
 
 
 def test_correction_replay_and_mixed_batches_keep_incoming(spark, tmp_path):
     lake = str(tmp_path / "lake")
     first = _bars(spark, _day("AAPL", 2) + _day("MSFT", 2))
     write_ingest_batch(first, 0, lake, tf="minute")
-    assert not first.storageLevel.useMemory and not first.storageLevel.useDisk  # released
     rows0 = _rows(spark, lake)
     write_ingest_batch(first, 0, lake, tf="minute")  # replay
     assert _rows(spark, lake) == rows0
@@ -127,16 +140,17 @@ def test_correction_replay_and_mixed_batches_keep_incoming(spark, tmp_path):
 
 @pytest.mark.parametrize("ticker", ["BRK/A", None], ids=["escaped", "null"])
 def test_correction_to_escaped_partition_replaces_rows(spark, tmp_path, ticker):
-    """The existence check must name the directory as the writer does
-    (``ticker=BRK%2FA``, ``ticker=__HIVE_DEFAULT_PARTITION__``); a miss
-    would skip the read-back and overwrite the partition with the
-    correction alone."""
+    """The staged leaf must be matched to the lake's directory as the
+    writer names it (``ticker=BRK%2FA``,
+    ``ticker=__HIVE_DEFAULT_PARTITION__``); a miss would publish the
+    correction alone over (or beside) the partition."""
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day(ticker, 2)), 0, lake, tf="minute")
     assert len(glob.glob(f"{lake}/ticker=*/year=2024/month=1/day=2/*.parquet")) == 1
 
     fix = _bars(spark, [(ticker, "2024-01-02 14:01:00", 99.0, 7)])
     write_ingest_batch(fix, 1, lake, tf="minute")
+    assert len(glob.glob(f"{lake}/ticker=*/year=2024/month=1/day=2/*.parquet")) == 1
     got = sorted((str(r["datetime"]), r["close"]) for r in read_lake(spark, lake).collect())
     assert got == [
         ("2024-01-02 14:00:00", 10.0),
@@ -148,7 +162,8 @@ def test_correction_to_escaped_partition_replaces_rows(spark, tmp_path, ticker):
 def _pre_change_sink(batch, lake, tf):
     """The sink as it was before the read-back became conditional:
     always a whole-lake mergeSchema read of the touched partitions
-    (selected by a Column-API OR-of-ANDs of null-safe equalities)."""
+    (selected by a Column-API OR-of-ANDs of null-safe equalities), then
+    one dynamic-overwrite write into the lake."""
     spark = batch.sparkSession
     keys = PARTITION_KEYS[tf]
     touched = batch.select(*keys).distinct().collect()
@@ -183,16 +198,16 @@ def test_new_partition_on_mixed_schema_lake_reads_like_before(spark, tmp_path):
     assert len(_rows(spark, new)) == 12
 
 
-def test_batch_unpersisted_when_lease_raises(spark, tmp_path, monkeypatch):
-    batch = _bars(spark, _day("AAPL", 2))
-    seen = []
+def test_lease_failure_leaves_lake_untouched(spark, tmp_path, monkeypatch):
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
+    before = _files(lake)
 
     class FailingLease:
         def __init__(self, *args, **kwargs):
             pass
 
         def __enter__(self):
-            seen.append(batch.storageLevel.useMemory)
             raise TimeoutError("lease held")
 
         def __exit__(self, *exc):
@@ -200,9 +215,97 @@ def test_batch_unpersisted_when_lease_raises(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ingest_stream, "LakeLease", FailingLease)
     with pytest.raises(TimeoutError):
-        write_ingest_batch(batch, 0, str(tmp_path / "lake"), tf="minute")
-    assert seen == [True]  # cached while the sink ran
-    assert not batch.storageLevel.useMemory and not batch.storageLevel.useDisk
+        write_ingest_batch(_bars(spark, _day("AAPL", 2, close=50.0) + _day("MSFT", 2)), 1, lake, tf="minute")
+    assert _files(lake) == before
+    assert not os.path.exists(f"{lake}/{STAGING}")
+
+
+@pytest.mark.parametrize("correction", [False, True], ids=["new", "correction"])
+def test_publish_failure_then_replay_matches_one_shot(spark, tmp_path, monkeypatch, correction):
+    """Publishing raises after the first of two leaves: the error
+    propagates, staging is gone, and replaying the batch converges to
+    the lake a one-shot write gives."""
+    failing, ref = str(tmp_path / "failing"), str(tmp_path / "ref")
+    day = 2 if correction else 3
+    batch = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7), ("MSFT", f"2024-01-0{day} 14:02:00", 98.0, 8)])
+    for lake in (failing, ref):
+        write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
+    write_ingest_batch(batch, 1, ref, tf="minute")
+
+    publish, calls = ingest_stream._publish, []
+
+    def flaky(*args, **kwargs):
+        calls.append(args[2])
+        if len(calls) == 2:
+            raise OSError("injected publish failure")
+        publish(*args, **kwargs)
+
+    monkeypatch.setattr(ingest_stream, "_publish", flaky)
+    with pytest.raises(OSError, match="injected"):
+        write_ingest_batch(batch, 1, failing, tf="minute")
+    assert len(calls) == 2
+    assert not os.path.exists(f"{failing}/{STAGING}")
+    monkeypatch.setattr(ingest_stream, "_publish", publish)
+
+    write_ingest_batch(batch, 1, failing, tf="minute")  # the replay
+    assert _rows(spark, failing) == _rows(spark, ref)
+    assert len(_rows(spark, ref)) == (6 if correction else 8)
+
+
+def test_empty_batch_leaves_lake_unchanged(spark, tmp_path):
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
+    before = _files(lake)
+    write_ingest_batch(_bars(spark, _day("AAPL", 2)).limit(0), 1, lake, tf="minute")
+    assert _files(lake) == before
+
+
+def test_correction_ignores_corrupt_file_in_untouched_partition(spark, tmp_path):
+    """The read-back opens only the touched partitions' files. The
+    parent sink merged footers across the whole lake and failed here."""
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
+    corrupt = f"{lake}/ticker=MSFT/year=2024/month=1/day=2/part-corrupt.parquet"
+    with open(corrupt, "wb") as f:
+        f.write(b"not a parquet file")
+
+    write_ingest_batch(_bars(spark, [("AAPL", "2024-01-02 14:01:00", 99.0, 7)]), 1, lake, tf="minute")
+    os.remove(corrupt)
+    got = read_lake(spark, lake).filter("ticker = 'AAPL'")
+    assert sorted((str(r["datetime"]), r["close"]) for r in got.collect()) == [
+        ("2024-01-02 14:00:00", 10.0),
+        ("2024-01-02 14:01:00", 99.0),
+        ("2024-01-02 14:02:00", 12.0),
+    ]
+
+
+def test_correction_keeps_string_partition_type(spark, tmp_path):
+    """Reading back only ``ticker=007`` must not re-infer the ticker as
+    an integer (which would write the merged rows to ``ticker=7``)."""
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("007", 2)), 0, lake, tf="minute")
+    write_ingest_batch(_bars(spark, [("007", "2024-01-02 14:01:00", 99.0, 7)]), 1, lake, tf="minute")
+    assert sorted(os.listdir(lake)) == ["ticker=007", "ticker=AAPL"]
+    got = read_lake(spark, lake).filter("ticker = '007'")
+    assert sorted((str(r["datetime"]), r["close"]) for r in got.collect()) == [
+        ("2024-01-02 14:00:00", 10.0),
+        ("2024-01-02 14:01:00", 99.0),
+        ("2024-01-02 14:02:00", 12.0),
+    ]
+
+
+def test_correction_keeps_extra_columns_of_old_files(spark, tmp_path):
+    """Old files of the touched partition carry ``vwap``; the batch does
+    not. Rows the batch does not correct keep their ``vwap``."""
+    lake = str(tmp_path / "lake")
+    write_ingest_batch(_bars(spark, _day("AAPL", 2), vwap=True), 0, lake, tf="minute")
+    write_ingest_batch(_bars(spark, [("AAPL", "2024-01-02 14:01:00", 99.0, 7)]), 1, lake, tf="minute")
+    got = sorted((str(r["datetime"]), r["close"], r["vwap"]) for r in read_lake(spark, lake).collect())
+    assert got == [
+        ("2024-01-02 14:00:00", 10.0, 10.5),
+        ("2024-01-02 14:01:00", 99.0, None),
+        ("2024-01-02 14:02:00", 12.0, 12.5),
+    ]
 
 
 def _exchanges(text: str) -> list[str]:
@@ -211,6 +314,8 @@ def _exchanges(text: str) -> list[str]:
 
 @pytest.mark.parametrize("correction", [False, True], ids=["new-partition", "correction"])
 def test_sink_write_plan_has_one_exchange(spark, tmp_path, monkeypatch, correction):
+    """Every ``write_lake`` the sink makes (the staged batch, and for a
+    correction also the merge) dedups and writes behind one shuffle."""
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
     plans = []
@@ -223,8 +328,9 @@ def test_sink_write_plan_has_one_exchange(spark, tmp_path, monkeypatch, correcti
     day = 2 if correction else 3
     fix = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7)])
     write_ingest_batch(fix, 1, lake, tf="minute")
-    assert len(plans) == 1
-    assert _exchanges(plans[0]) == ["Exchange"], plans[0]
+    assert len(plans) == (2 if correction else 1)
+    for plan in plans:
+        assert _exchanges(plan) == ["Exchange"], plan
     assert len(_rows(spark, lake)) == (3 if correction else 4)
 
 
