@@ -1396,17 +1396,13 @@ def cmd_lake(args: argparse.Namespace) -> int:
         from .sources.lake import delete_from_lake
 
         keys = spark.read.parquet(args.keys)
-        n = delete_from_lake(
-            spark, args.path, keys, args.key_col, args.partition_cols.split(",")
-        )
+        n = delete_from_lake(spark, args.path, keys, args.key_col)
         print(f"deleted {n} rows")
     else:  # merge
         from .sources.lake import merge_into_lake
 
         updates = spark.read.parquet(args.updates)
-        stats = merge_into_lake(
-            spark, args.path, updates, args.key_col, args.partition_cols.split(",")
-        )
+        stats = merge_into_lake(spark, args.path, updates, args.key_col)
         print(f"updated {stats['rows_updated']} inserted {stats['rows_inserted']}")
     return 0
 
@@ -1873,8 +1869,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--keys", default=None, help="delete: parquet of keys to remove")
     p.add_argument("--updates", default=None, help="merge: parquet of full replacement rows")
     p.add_argument("--key-col", default="doc_id")
-    p.add_argument("--partition-cols", default="source",
-                   help="comma-separated partition columns (delete/merge)")
     _add_common(p)
     p.set_defaults(fn=cmd_lake)
 

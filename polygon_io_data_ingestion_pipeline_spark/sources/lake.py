@@ -11,6 +11,9 @@ manifest/walk file selection 80-147, thread-pooled reads 284-304):
 - atomicity comes from Spark's commit protocol; idempotent backfill
   from dynamic partition overwrite (the reference's "overlaps are fine,
   re-runs just overwrite" contract, emit_split_backfill_cmds.py:29);
+- every partition rewrite (the streaming sink, delete, merge and
+  compaction) stages its output and publishes leaf directories by
+  rename — the reference's tmp-file renames — through one path here;
 - the manifest is obsolete: partition pruning + parquet row-group
   min/max stats give the same file skipping at query time — the loader
   just pushes ticker/time predicates into the scan;
@@ -23,10 +26,14 @@ from __future__ import annotations
 import hashlib
 import json
 import weakref
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable, Iterator
+from contextlib import contextmanager, nullcontext
+from functools import cached_property
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .lease import LakeLease
 
@@ -219,97 +226,6 @@ def lake_manifest(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def compact_lake(
-    spark: SparkSession,
-    path: str,
-    tf: str = "day",
-    max_records_per_file: int = 5_000_000,
-    small_file_bytes: int = 32 * 1024 * 1024,
-    lease: bool = True,
-) -> dict[str, int]:
-    """Lake maintenance: rewrite partitions fragmented into many small
-    files as one-(or-few)-sorted-files-per-partition — the small-file
-    compaction every long-lived 100 TB lake needs (streaming ingest and
-    frequent backfills each commit a file per trigger per partition,
-    and scan throughput collapses when file count >> row groups).
-
-    Only partitions that are actually fragmented (more than one file,
-    or any file under ``small_file_bytes``) are rewritten, via dynamic
-    partition overwrite — untouched partitions keep their files, so
-    compaction cost is proportional to the fragmentation, not the lake.
-    The rewrite preserves the lake contract (in-file datetime ordering,
-    zstd, ``max_records_per_file`` cap) and is idempotent.
-
-    Returns {"partitions_compacted": n, "files_before": m}.
-
-    Serialized behind the lake's maintenance lease (``lease=False`` to
-    opt out when the caller already holds it): plain parquet has no
-    commit protocol, so a compaction interleaving with a MERGE or the
-    streaming sink on the same partition would replace it from a stale
-    file listing and lose the other writer's rows
-    (tests/test_lake_lease.py proves the race on the raw primitives).
-    """
-    if lease:
-        # ttl_sec=3600: at 100 TB a partition-heavy maintenance pass can
-        # run for tens of minutes; the default 10-minute TTL would let a
-        # waiter break a LIVE holder's lease mid-rewrite. An hour bounds
-        # crash recovery while covering any realistic single op.
-        with LakeLease(spark, path, holder="compact_lake", ttl_sec=3600.0):
-            return compact_lake(
-                spark,
-                path,
-                tf=tf,
-                max_records_per_file=max_records_per_file,
-                small_file_bytes=small_file_bytes,
-                lease=False,
-            )
-    keys = PARTITION_KEYS[tf]
-    df = spark.read.parquet(path)
-    per_file = (
-        df.select(*[F.col(k) for k in keys], F.input_file_name().alias("__file"))
-        .groupBy(*keys, "__file")
-        .agg(F.count("*").alias("__rows"))
-    )
-    # File sizes come from the driver-side listing (one stat per file —
-    # metadata-scale work, like any table-maintenance planner).
-    import os as _os
-
-    frag = (
-        per_file.groupBy(*keys)
-        .agg(F.count("*").alias("__nfiles"), F.collect_list("__file").alias("__files"))
-        .collect()
-    )
-
-    def _local(p: str) -> str:
-        return p.removeprefix("file:")
-
-    todo = []
-    files_before = 0
-    for r in frag:
-        files_before += r["__nfiles"]
-        small = any(
-            _os.path.getsize(_local(f)) < small_file_bytes
-            for f in r["__files"]
-            if _os.path.exists(_local(f))
-        )
-        if r["__nfiles"] > 1 or small:
-            todo.append(r)
-    if not todo:
-        return {"partitions_compacted": 0, "files_before": files_before}
-
-    (
-        _lake_layout(_only_partitions(df, todo, keys), keys)
-        .write.partitionBy(*keys)
-        .option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .mode("overwrite")
-        .parquet(path)
-    )
-    spark.catalog.refreshByPath(path)
-    return {"partitions_compacted": len(todo), "files_before": files_before}
-
-
 def zorder_key(
     df: DataFrame, cols: list[str], bits: int = 8, sample_fraction: float | None = None
 ) -> DataFrame:
@@ -386,126 +302,306 @@ def write_lake_zordered(
     )
 
 
+# ---------------------------------------------------------------------------
+# Partition rewrites: the streaming sink, delete, merge and compaction all
+# rewrite a lake partition one way. Each names its touched partitions as
+# leaf directories relative to the lake root, writes its output into hidden
+# staging, replaces each staged leaf the lake has and publishes each one it
+# lacks by rename (the reference's tmp-file rename, ingest.py:294-301), and
+# deletes each touched leaf staging did not produce: that partition is now
+# empty. The files being read are never the write target.
+# ---------------------------------------------------------------------------
+
+#: hidden staging root under the lake: Spark's readers skip a name that
+#: starts with ``_`` and holds no ``=``.
+STAGING = "_lake_staging"
+
+
+class _LakeFS:
+    """The lake root on its Hadoop FileSystem (any scheme), with the JVM
+    classes resolved once and paths given relative to the root."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        jvm = spark._jvm
+        # each class by its dotted name: one round trip, not one per package step
+        self._path = getattr(jvm, "org.apache.hadoop.fs.Path")
+        self._stat2paths = getattr(jvm, "org.apache.hadoop.fs.FileUtil").stat2Paths
+        self._array_seq = getattr(jvm, "scala.collection.immutable.ArraySeq")
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self._jroot = self._path(self.root)
+        self.fs = self._jroot.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def path(self, rel: str):
+        """The Hadoop ``Path`` of ``rel`` under the root."""
+        return self._path(self._jroot, rel)
+
+    def uri(self, rel: str) -> str:
+        """``rel`` under the root ("" for the root) as a path string for
+        Spark's readers and writers."""
+        return f"{self.root}/{rel}" if rel else self.root
+
+    def files(self, rel: str, keys: list[str]) -> dict[str, list[str]]:
+        """The data files of the partition leaf directories under ``rel``:
+        leaf relative to ``rel`` -> file names, hidden (``_``/``.``) files
+        left out as Spark's readers leave them out. ``len(keys) + 1``
+        ``listStatus`` calls, each over a whole level at once (a file
+        lists as itself, so the walk makes no call per entry), and the
+        paths joined on the JVM into one string."""
+        base = self.fs.makeQualified(self.path(rel) if rel else self._jroot)
+        level = self.fs.listStatus(base)
+        for _ in keys:
+            level = self.fs.listStatus(self._stat2paths(level))
+        found = self._array_seq.unsafeWrapArray(self._stat2paths(level)).mkString("\0")
+        prefix = base.toString() + "/"
+        leaves: dict[str, list[str]] = {}
+        for f in found.split("\0"):
+            parts = f.removeprefix(prefix).split("/") if f.startswith(prefix) else []
+            if (
+                len(parts) == len(keys) + 1
+                and all(p.startswith(f"{k}=") for p, k in zip(parts, keys))
+                and not parts[-1].startswith(("_", "."))
+            ):
+                leaves.setdefault("/".join(parts[:-1]), []).append(parts[-1])
+        return leaves
+
+    def leaves(self, rel: str, keys: list[str]) -> list[str]:
+        """The partition leaf directories under ``rel``, relative to it."""
+        return sorted(self.files(rel, keys))
+
+    @cached_property
+    def _root_path(self) -> str:
+        """The root as a decoded path."""
+        return self.fs.makeQualified(self._jroot).toUri().getPath().rstrip("/")
+
+    def leaf_of(self, dir_uri: str) -> str:
+        """The leaf, relative to the root, of a directory URI as
+        ``_metadata.file_path`` and ``input_file_name()`` spell it. Those
+        are URL-encoded (``source=BRK%2FA`` reads ``source=BRK%252FA``)
+        and Hadoop's ``Path(String)`` does not decode, so decode the
+        URI's path first."""
+        return unquote(urlsplit(dir_uri).path).removeprefix(self._root_path + "/")
+
+
+@contextmanager
+def _staging(spark: SparkSession, path: str) -> Iterator[_LakeFS]:
+    """The lake at ``path`` with its staging deleted before (a crashed
+    rewrite's leftovers are never published) and after, also on failure;
+    Spark's cached listings of the lake are refreshed on the way out."""
+    lake = _LakeFS(spark, path)
+    lake.fs.delete(lake.path(STAGING), True)
+    try:
+        yield lake
+    finally:
+        lake.fs.delete(lake.path(STAGING), True)
+        spark.catalog.refreshByPath(path)
+
+
+def _lease(spark: SparkSession, path: str, holder: str, lease: bool):
+    """The lake's maintenance lease for ``holder``, or no lease when the
+    caller already holds it. ttl_sec=3600: at 100 TB a partition-heavy
+    maintenance pass can run for tens of minutes; the default 10-minute
+    TTL would let a waiter break a LIVE holder's lease mid-rewrite."""
+    return LakeLease(spark, path, holder=holder, ttl_sec=3600.0) if lease else nullcontext()
+
+
+def _publish(lake: _LakeFS, src: str, dst: str) -> None:
+    """Move the staged leaf ``src`` to the lake leaf ``dst`` (both
+    relative to the lake root) by rename, replacing ``dst`` if the lake
+    has it and creating its parent if not."""
+    target = lake.path(dst)
+    lake.fs.delete(target, True)
+    lake.fs.mkdirs(target.getParent())
+    if not lake.fs.rename(lake.path(src), target):
+        raise OSError(f"could not rename {src} to {dst} under {lake.root}")
+
+
+def _partition_names(lake: _LakeFS, lake_df: DataFrame) -> list[str]:
+    """The partition columns of ``lake_df``, a read of the whole lake, in
+    the lake's directory order."""
+    relation = lake_df._jdf.queryExecution().analyzed().relation()
+    names = [f["name"] for f in json.loads(relation.partitionSchema().json())["fields"]]
+    if not names:
+        raise ValueError(f"{lake.root} is not a partitioned lake")
+    return names
+
+
+def _read_leaves(lake: _LakeFS, keys: list[str], *groups: tuple[str, list[str]]) -> list[DataFrame]:
+    """One frame per ``(base, leaves)`` group, ``leaves`` relative to the
+    lake directory ``base`` ("" for the root). Footers are merged over
+    exactly the files of all groups (each leaf its own base path here, so
+    no partition column is inferred): one footer's schema would drop the
+    columns of the others. The partition columns ``keys`` read as
+    strings, the one type that writes every directory name back as it
+    was: an inferred type turns ``ticker=007`` into 7, whether inferred
+    from a subset of the directories or from a lake whose values all
+    look numeric."""
+    spark = lake.spark
+    dirs = [[lake.uri(f"{base}/{leaf}" if base else leaf) for leaf in leaves] for base, leaves in groups]
+    data = spark.read.option("mergeSchema", True).parquet(*(d for ds in dirs for d in ds)).schema
+    schema = StructType([*data.fields, *(StructField(k, StringType()) for k in keys)])
+    return [
+        spark.read.schema(schema).option("basePath", lake.uri(base)).parquet(*ds)
+        if ds
+        else spark.createDataFrame([], schema)
+        for (base, _), ds in zip(groups, dirs)
+    ]
+
+
+def _rewrite(
+    lake: _LakeFS,
+    keys: list[str],
+    touched: list[str],
+    out: DataFrame,
+    write: Callable[[DataFrame, str], None],
+) -> None:
+    """Replace the ``touched`` lake leaves with ``out``, their rows after
+    the rewrite: ``write`` it into staging, replace each staged leaf the
+    lake has, publish each one it lacks, and delete each touched leaf
+    staging did not produce (that partition is now empty)."""
+    staged = f"{STAGING}/out"
+    write(out, lake.uri(staged))
+    produced = lake.leaves(staged, keys)
+    for leaf in produced:
+        _publish(lake, f"{staged}/{leaf}", leaf)
+    for leaf in sorted(set(touched).difference(produced)):
+        lake.fs.delete(lake.path(leaf), True)
+
+
+def _merge_staged(
+    lake: _LakeFS,
+    staged: str,
+    keys: list[str],
+    combine: Callable[[DataFrame, DataFrame], DataFrame],
+    write: Callable[[DataFrame, str], None],
+    stale: Iterable[str] = (),
+) -> None:
+    """Bring the leaves staged under ``staged`` into the lake: rewrite
+    the lake leaves they land on, plus the ``stale`` ones, from
+    ``combine(old rows, staged rows)``, and publish each staged leaf the
+    lake lacks by rename (reading nothing for it)."""
+    leaves = lake.leaves(staged, keys)
+    existing = [leaf for leaf in leaves if lake.fs.exists(lake.path(leaf))]
+    touched = sorted({*existing, *stale})
+    if touched:
+        old, new = _read_leaves(lake, keys, ("", touched), (staged, existing))
+        _rewrite(lake, keys, touched, combine(old, new), write)
+    # after the rewrite, which may still read every staged row (a merge's keys)
+    for leaf in sorted(set(leaves).difference(existing)):
+        _publish(lake, f"{staged}/{leaf}", leaf)
+
+
+def _holding(lake: _LakeFS, lake_df: DataFrame, keys: DataFrame, key_col: str) -> tuple[list[str], int, int]:
+    """The leaves holding any of ``keys``, the lake rows matched and the
+    distinct keys matched: one aggregate over the key column and the
+    directories of the files (O(touched leaves) to the driver)."""
+    row = (
+        lake_df.select(key_col, F.regexp_replace("_metadata.file_path", "/[^/]*$", "").alias("__dir"))
+        .join(keys, key_col, "left_semi")
+        .agg(F.collect_set("__dir"), F.count("*"), F.count_distinct(key_col))
+        .first()
+    )
+    return sorted(map(lake.leaf_of, row[0])), row[1], row[2]
+
+
+def compact_lake(
+    spark: SparkSession,
+    path: str,
+    tf: str = "day",
+    max_records_per_file: int = 5_000_000,
+    small_file_bytes: int = 32 * 1024 * 1024,
+    lease: bool = True,
+) -> dict[str, int]:
+    """Lake maintenance: rewrite partitions fragmented into many small
+    files as one-(or-few)-sorted-files-per-partition — the small-file
+    compaction every long-lived 100 TB lake needs (streaming ingest and
+    frequent backfills each commit a file per trigger per partition,
+    and scan throughput collapses when file count >> row groups).
+
+    The plan is a listing, not a scan: the Hadoop FileSystem lists the
+    partition leaves and their files, and a leaf is fragmented when it
+    has more than one file or its one file is under ``small_file_bytes``
+    (one status call per single-file leaf). Only fragmented leaves are
+    read back (footers merged over exactly their files, so a column only
+    newer files carry survives; partition columns as their directory
+    strings, so ``ticker=007`` stays "007") and rewritten through
+    staging, then
+    published by rename; untouched partitions keep their files, so
+    compaction cost is proportional to the fragmentation, not the lake.
+    The rewrite preserves the lake contract (in-file datetime ordering,
+    zstd, ``max_records_per_file`` cap) and is idempotent.
+
+    Returns {"partitions_compacted": n, "files_before": m}.
+
+    Serialized behind the lake's maintenance lease (``lease=False`` to
+    opt out when the caller already holds it): plain parquet has no
+    commit protocol, so a compaction interleaving with a MERGE or the
+    streaming sink on the same partition would replace it from a stale
+    file listing and lose the other writer's rows
+    (tests/test_lake_lease.py proves the race on the raw primitives).
+    """
+    keys = PARTITION_KEYS[tf]
+
+    def write(df: DataFrame, out: str) -> None:
+        (
+            _lake_layout(df, keys)
+            .write.partitionBy(*keys)
+            .option("compression", "zstd")
+            .option("maxRecordsPerFile", max_records_per_file)
+            .parquet(out)
+        )
+
+    with _lease(spark, path, "compact_lake", lease), _staging(spark, path) as lake:
+        files = lake.files("", keys)
+        todo = [
+            leaf
+            for leaf, names in sorted(files.items())
+            if len(names) > 1 or lake.fs.getFileStatus(lake.path(f"{leaf}/{names[0]}")).getLen() < small_file_bytes
+        ]
+        if todo:
+            (old,) = _read_leaves(lake, keys, ("", todo))
+            _rewrite(lake, keys, todo, old, write)
+    return {"partitions_compacted": len(todo), "files_before": sum(map(len, files.values()))}
+
+
 def delete_from_lake(
     spark: SparkSession,
     path: str,
     keys_df: DataFrame,
     key_col: str,
-    partition_cols: list[str],
     lease: bool = True,
 ) -> int:
     """Targeted row deletion from a partitioned parquet lake — the
     takedown / right-to-be-forgotten primitive a training-data store
     must serve (copyright removals, PII erasure, opt-outs).
 
-    Without a table format the unit of rewrite is the partition, so the
-    job is: find the partitions that actually hold matching keys (one
-    semi-join aggregation — O(touched partitions) driver memory), read
-    ONLY those back (exact OR-of-ANDs partition filter -> pruned scan),
-    anti-join the keys out, eagerly ``localCheckpoint`` (Spark must not
-    lazily re-read the files it is about to replace), and
-    dynamic-partition-overwrite just the touched partitions. Untouched
-    partitions keep their files byte-for-byte (mtime-asserted in
-    tests) — at 100 TB a deletion of k documents costs the partitions
-    they live in, not the lake. Returns the number of rows deleted.
+    Without a table format the unit of rewrite is the partition. One
+    aggregate over the lake's key column and file directories finds the
+    partition leaves that hold a key (and counts the rows to delete);
+    only those leaves are read back (footers merged over exactly their
+    files, partition columns as their directory strings), the keys are
+    anti-joined out, and the survivors are written into staging and
+    published by rename. A leaf left with no rows is deleted, so a
+    takedown of a whole partition leaves no file behind. Untouched
+    partitions keep their files byte-for-byte (mtime-asserted in tests)
+    — at 100 TB a deletion of k documents costs the partitions they
+    live in, not the lake. The partition columns are the lake's own
+    (``ValueError`` for an unpartitioned lake). Returns the number of
+    rows deleted.
 
     Serialized behind the lake's maintenance lease (``lease=False``
     opts out when the caller already holds it).
     """
-    if lease:
-        with LakeLease(spark, path, holder="delete_from_lake", ttl_sec=3600.0):
-            return delete_from_lake(
-                spark, path, keys_df, key_col, partition_cols, lease=False
-            )
-    lake = spark.read.parquet(path)
-    keys = keys_df.select(F.col(key_col)).distinct()
-    touched = (
-        lake.join(F.broadcast(keys), key_col, "left_semi")
-        .select(*partition_cols)
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return 0
-    affected = _only_partitions(lake, touched, partition_cols)
-    n_before = affected.count()
-    kept = affected.join(F.broadcast(keys), key_col, "left_anti").localCheckpoint()
-    n_deleted = n_before - kept.count()
-    # Dynamic partition overwrite only replaces partitions PRESENT in the
-    # written data — it cannot represent "this partition is now empty".
-    # A takedown that deletes every row of a partition must therefore
-    # remove that partition's directory explicitly, or the old files
-    # silently survive (the one failure mode a right-to-be-forgotten
-    # primitive cannot have). Resolve the emptied partitions' actual
-    # leaf directories from their files (sidesteps partition-path value
-    # escaping) and delete them through the Hadoop FileSystem API, which
-    # works on any scheme (file://, hdfs://, s3a://) — not just local.
-    survivors = {
-        tuple(r[c] for c in partition_cols)
-        for r in kept.select(*partition_cols).distinct().collect()
-    }
-    emptied = [
-        row for row in touched if tuple(row[c] for c in partition_cols) not in survivors
-    ]
-    empty_dirs = _partition_dirs(lake, emptied, partition_cols)
-    if kept.take(1):
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    _delete_dirs(spark, empty_dirs)
-    spark.catalog.refreshByPath(path)
+    with _lease(spark, path, "delete_from_lake", lease), _staging(spark, path) as lake:
+        lake_df = spark.read.parquet(path)
+        names = _partition_names(lake, lake_df)
+        keys = F.broadcast(keys_df.select(key_col))
+        touched, n_deleted, _ = _holding(lake, lake_df, keys, key_col)
+        if touched:
+            (old,) = _read_leaves(lake, names, ("", touched))
+            kept = old.join(keys, key_col, "left_anti")
+            _rewrite(lake, names, touched, kept, lambda df, out: df.write.partitionBy(*names).parquet(out))
     return n_deleted
-
-
-def _only_partitions(df: DataFrame, rows, partition_cols: list[str]) -> DataFrame:
-    """``df`` restricted to exactly the given partition tuples: one
-    OR-of-ANDs predicate, every value a bound parameter (never SQL
-    text), so it prunes like a literal filter and the values show in
-    the scan's ``PartitionFilters``.
-
-    Null-safe equality: a null partition value is written to disk as
-    ``__HIVE_DEFAULT_PARTITION__`` and reads back as NULL — plain ``=``
-    would never match it, silently skipping that partition in
-    delete/merge (the exact "old files survive" failure the delete
-    docstring rules out).  ``<=>`` matches it like any other value;
-    ``_partition_dirs`` and dynamic overwrite already handle the null
-    directory correctly."""
-    args, clauses = {}, []
-    for row in rows:
-        terms = []
-        for c in partition_cols:
-            name = f"p{len(args)}"
-            args[name] = row[c]
-            terms.append(f"{sql_ident(c)} <=> :{name}")
-        clauses.append(f"({' AND '.join(terms)})")
-    return df.sparkSession.sql(f"SELECT * FROM {{df}} WHERE {' OR '.join(clauses)}", args=args, df=df)
-
-
-def _partition_dirs(lake: DataFrame, rows, partition_cols: list[str]) -> set[str]:
-    """Resolve partition tuples to their on-disk leaf directories via the
-    partitions' actual file paths — sidesteps partition-path value
-    escaping entirely."""
-    if not rows:
-        return set()
-    return {
-        r["f"].rsplit("/", 1)[0]
-        for r in _only_partitions(lake, rows, partition_cols)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    }
-
-
-def _delete_dirs(spark: SparkSession, dirs: set[str]) -> None:
-    """Recursively delete directories through the Hadoop FileSystem API —
-    works on any scheme (file://, hdfs://, s3a://), not just local."""
-    path_cls, conf = getattr(spark._jvm, "org.apache.hadoop.fs.Path"), spark._jsc.hadoopConfiguration()
-    for d in dirs:
-        jpath = path_cls(d)
-        jpath.getFileSystem(conf).delete(jpath, True)
 
 
 def merge_into_lake(
@@ -513,7 +609,6 @@ def merge_into_lake(
     path: str,
     updates: DataFrame,
     key_col: str,
-    partition_cols: list[str],
     lease: bool = True,
 ) -> dict:
     """Keyed upsert (lakehouse ``MERGE``) into a plain-parquet
@@ -522,81 +617,52 @@ def merge_into_lake(
     keys the lake has never seen are inserted. Copy-on-write at
     partition granularity, the additive twin of :func:`delete_from_lake`.
 
-    The rewrite set is exactly (a) partitions holding a stale version of
-    an updated key, plus (b) target partitions of the updates that
-    already exist in the lake (dynamic overwrite would otherwise replace
-    them with ONLY the update rows, dropping their resident data). Both
-    come from one broadcast semi-join each — O(touched partitions)
-    driver memory. A partition left with no rows at all (its only key
-    moved elsewhere) is deleted explicitly, since dynamic overwrite
-    cannot express emptiness. Untouched partitions keep their files
-    byte-for-byte.
+    The updates are written into staging first (so they are computed
+    once). A staged partition leaf the lake lacks is published by
+    rename and nothing is read for it. The leaves rewritten are exactly
+    (a) the lake leaves the other staged leaves land on and (b) the
+    leaves holding a stale version of an updated key, found by one
+    aggregate over the lake's key column and file directories. They are
+    read back (footers merged over exactly their files and the staged
+    ones, partition columns as their directory strings), the updated
+    keys are anti-joined out, the staged rows added,
+    and the result is written into staging and published by rename. A
+    leaf left with no rows (its only key moved elsewhere) is deleted.
+    Untouched partitions keep their files byte-for-byte. The partition
+    columns are the lake's own (``ValueError`` for an unpartitioned
+    lake).
 
-    ``updates`` must carry the full lake row (data + partition columns)
-    and at most one row per key — upsert with multiple versions per key
-    is ambiguous; pre-dedup with keep-last if needed. Returns
-    ``{"rows_updated": ..., "rows_inserted": ...}`` counted in KEYS
+    ``updates`` must carry the full lake row (data + partition columns;
+    a data column the lake has is cast to the lake's type, so the files
+    of a leaf agree) and at most one row per key — upsert with multiple
+    versions per key is ambiguous; pre-dedup with keep-last if needed.
+    Returns ``{"rows_updated": ..., "rows_inserted": ...}`` counted in KEYS
     (a lake row duplicated per key collapses to the one update row and
     still counts once).  Serialized behind the lake's maintenance lease
     (``lease=False`` opts out when the caller already holds it).
     """
-    if lease:
-        with LakeLease(spark, path, holder="merge_into_lake", ttl_sec=3600.0):
-            return merge_into_lake(
-                spark, path, updates, key_col, partition_cols, lease=False
-            )
-    lake = spark.read.parquet(path)
-    updates = updates.select(*lake.columns).localCheckpoint()
-    keys = updates.select(F.col(key_col)).distinct()
-    # ONE lake scan: the semi-join result (at most the updated rows, a
-    # tiny frame) is materialized and answers both questions — which
-    # partitions hold stale versions, and which update KEYS matched.
-    # rows_updated counts matched keys, not matched lake rows: a lake
-    # holding duplicate rows per key (plain appends before adopting
-    # merge) would otherwise inflate the count and drive rows_inserted
-    # negative, while the merge itself (correctly) collapses the
-    # duplicates to the single update row.
-    matched = (
-        lake.join(F.broadcast(keys), key_col, "left_semi")
-        .select(key_col, *partition_cols)
-        .localCheckpoint()
-    )
-    stale = matched.select(*partition_cols).distinct().collect()
-    target = updates.select(*partition_cols).distinct().collect()
-    if not target:
-        return {"rows_updated": 0, "rows_inserted": 0}
-    existing_targets = (
-        _only_partitions(lake, target, partition_cols).select(*partition_cols).distinct().collect()
-    )
-    seen: set[tuple] = set()
-    touched = []
-    for row in list(stale) + list(existing_targets):
-        key = tuple(row[c] for c in partition_cols)
-        if key not in seen:
-            seen.add(key)
-            touched.append(row)
-    n_updated = matched.select(key_col).distinct().count()
-    n_inserted = updates.count() - n_updated
-    if touched:
-        affected = _only_partitions(lake, touched, partition_cols)
-        survivors = affected.join(F.broadcast(keys), key_col, "left_anti")
-        out = survivors.unionByName(updates).localCheckpoint()
-    else:
-        out = updates
-    out_parts = {
-        tuple(r[c] for c in partition_cols)
-        for r in out.select(*partition_cols).distinct().collect()
-    }
-    emptied = [
-        row for row in touched if tuple(row[c] for c in partition_cols) not in out_parts
-    ]
-    empty_dirs = _partition_dirs(lake, emptied, partition_cols)
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-    _delete_dirs(spark, empty_dirs)
-    spark.catalog.refreshByPath(path)
+    with _lease(spark, path, "merge_into_lake", lease), _staging(spark, path) as lake:
+        lake_df = spark.read.parquet(path)
+        keys, staged = _partition_names(lake, lake_df), f"{STAGING}/updates"
+        types = {f.name: f.dataType for f in lake_df.schema.fields if f.name not in keys}
+        updates = updates.select(*(F.col(c).cast(types[c]) if c in types else F.col(c) for c in updates.columns))
+        updates.write.partitionBy(*keys).parquet(lake.uri(staged))
+        # the staged files' own schema: the one they were just written with
+        schema = StructType([*updates.drop(*keys).schema.fields, *(StructField(k, StringType()) for k in keys)])
+        incoming = (
+            spark.read.schema(schema)
+            .option("basePath", lake.uri(staged))
+            .parquet(lake.uri(staged))
+        )
+        updated = F.broadcast(incoming.select(key_col))
+        stale, _, n_updated = _holding(lake, lake_df, updated, key_col)
+        n_inserted = incoming.count() - n_updated
+        _merge_staged(
+            lake,
+            staged,
+            keys,
+            lambda old, new: old.join(updated, key_col, "left_anti").unionByName(new),
+            lambda df, out: df.write.partitionBy(*keys).parquet(out),
+            stale=stale,
+        )
     return {"rows_updated": n_updated, "rows_inserted": n_inserted}

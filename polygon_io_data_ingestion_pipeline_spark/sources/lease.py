@@ -2,8 +2,8 @@
 
 A plain parquet lake has no commit ledger, so two concurrent
 copy-on-write maintainers can silently lose rows: each captures a file
-listing at read time, and whichever dynamic-partition-overwrite lands
-last replaces the partition from its STALE snapshot — the other
+listing at read time, and whichever partition rewrite lands last
+replaces the partition from its STALE snapshot — the other
 writer's rows vanish without an error (proven in
 tests/test_lake_lease.py).  Table formats solve this with optimistic
 commit protocols; for this lake the maintenance operations

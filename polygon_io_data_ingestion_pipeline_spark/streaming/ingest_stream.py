@@ -27,19 +27,14 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..sources.csv_bars import normalize_bar_frame
-from ..sources.lake import PARTITION_KEYS, sql_ident, write_lake
+from ..sources.lake import PARTITION_KEYS, STAGING, _merge_staged, _staging, sql_ident, write_lake
 from ..sources.lease import LakeLease
 
 #: bar identity: one row per (ticker, instant) — the reference's
 #: overwrite granularity (ingest.py:289-314 buckets by exactly this).
 BAR_KEY = ["ticker", "datetime"]
-
-#: hidden staging root under the lake: Spark's readers skip a name that
-#: starts with ``_`` and holds no ``=``.
-STAGING = "_ingest_staging"
 
 
 def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: str = "day") -> None:
@@ -50,26 +45,28 @@ def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: s
     whose checkpoint offset didn't advance is re-executed on restart,
     and a corrected upstream file re-delivers keys the lake already
     holds. A plain append duplicates both. Here the sink, under the
-    lake's maintenance lease:
+    lake's maintenance lease and through the lake's one partition
+    rewrite path (``sources/lake.py``, shared with delete, merge and
+    compaction):
 
     1. **stages** the batch, deduped to one row per bar (the partition
        keys + ``datetime``, which determines the date keys, so the same
        rows as ``BAR_KEY``), through :func:`write_lake` into the hidden
-       ``<lake>/_ingest_staging``: same layout, sort and codec as batch
+       ``<lake>/_lake_staging``: same layout, sort and codec as batch
        ingest, and the batch's source files are decoded once;
     2. **lists** the staged partition leaf directories through the
        Hadoop FileSystem API (never a glob: the lake path may hold glob
        characters). They carry the writer's own names (escaped values,
        ``__HIVE_DEFAULT_PARTITION__`` for null), so the lake's directory
        of the same partition has the same relative path;
-    3. **publishes** each leaf the lake does not have yet with
-       ``mkdirs`` + ``rename`` (the reference's tmp-file rename,
-       ingest.py:294-301). A batch of brand-new partitions reads nothing;
-    4. **merges** each leaf the lake already has: reads back only those
+    3. **merges** each leaf the lake already has: reads back only those
        lake leaves and the staged ones, keeps the incoming row per bar
        (a deterministic value-column tiebreak within a source, so a
        replay reproduces the lake exactly), writes the result into
        staging and replaces the lake leaf with it (delete + rename);
+    4. **publishes** each leaf the lake does not have yet with
+       ``mkdirs`` + ``rename`` (the reference's tmp-file rename,
+       ingest.py:294-301). A batch of brand-new partitions reads nothing;
     5. deletes staging before and after (``finally``), so a crashed
        batch's leftovers are never published, and refreshes the lake's
        cached listings.
@@ -87,14 +84,16 @@ def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: s
     # The whole stage-publish-merge runs under the lake's maintenance
     # lease: a compaction interleaving between this sink's lake read and
     # its leaf replacement would otherwise race it for the same files.
-    with LakeLease(spark, lake_path, holder="ingest_stream"):
-        lake = _LakeFS(spark, lake_path)
-        lake.fs.delete(lake.path(STAGING), True)
-        try:
-            _stage_and_publish(batch_df, lake, tf)
-        finally:
-            lake.fs.delete(lake.path(STAGING), True)
-            spark.catalog.refreshByPath(lake_path)
+    with LakeLease(spark, lake_path, holder="ingest_stream"), _staging(spark, lake_path) as lake:
+        keys, staged = PARTITION_KEYS[tf], f"{STAGING}/batch"
+        write_lake(_dedup_for_write(_tagged_union(None, batch_df), keys), lake.uri(staged), tf=tf)
+        _merge_staged(
+            lake,
+            staged,
+            keys,
+            lambda old, new: _dedup_for_write(_tagged_union(old, new), keys),
+            lambda df, path: write_lake(df, path, tf=tf),
+        )
 
 
 def merge_keep_incoming(
@@ -149,90 +148,6 @@ def _dedup_for_write(union: DataFrame, keys: list[str]) -> DataFrame:
     window's sort (partition keys, then datetime) covers its
     sortWithinPartitions too — dedup and write share one shuffle."""
     return _keep_first(union.repartition(*keys), [*keys, "datetime"])
-
-
-class _LakeFS:
-    """The lake root on its Hadoop FileSystem (any scheme), with the JVM
-    classes resolved once and paths given relative to the root."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        jvm = spark._jvm
-        # each class by its dotted name: one round trip, not one per package step
-        self._path = getattr(jvm, "org.apache.hadoop.fs.Path")
-        self._stat2paths = getattr(jvm, "org.apache.hadoop.fs.FileUtil").stat2Paths
-        self._array_seq = getattr(jvm, "scala.collection.immutable.ArraySeq")
-        self.root = root.rstrip("/")
-        self._jroot = self._path(self.root)
-        self.fs = self._jroot.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def path(self, rel: str):
-        """The Hadoop ``Path`` of ``rel`` under the root."""
-        return self._path(self._jroot, rel)
-
-    def uri(self, rel: str) -> str:
-        """``rel`` under the root as a path string for Spark's readers
-        and writers."""
-        return f"{self.root}/{rel}"
-
-    def leaves(self, rel: str, keys: list[str]) -> list[str]:
-        """The partition leaf directories under ``rel``, relative to it,
-        found from the files one level below them: ``len(keys) + 1``
-        ``listStatus`` calls, each over a whole level at once (a file
-        lists as itself, so the walk makes no call per entry), and the
-        paths joined on the JVM into one string."""
-        base = self.fs.makeQualified(self.path(rel))
-        level = self.fs.listStatus(base)
-        for _ in keys:
-            level = self.fs.listStatus(self._stat2paths(level))
-        files = self._array_seq.unsafeWrapArray(self._stat2paths(level)).mkString("\0")
-        prefix = base.toString() + "/"
-        leaves = set()
-        for f in files.split("\0"):
-            parts = f.removeprefix(prefix).split("/") if f.startswith(prefix) else []
-            if len(parts) == len(keys) + 1 and all(p.startswith(f"{k}=") for p, k in zip(parts, keys)):
-                leaves.add("/".join(parts[:-1]))
-        return sorted(leaves)
-
-
-def _stage_and_publish(batch: DataFrame, lake: _LakeFS, tf: str) -> None:
-    spark = batch.sparkSession
-    keys = PARTITION_KEYS[tf]
-    staged, merged = f"{STAGING}/batch", f"{STAGING}/merge"
-    write_lake(_dedup_for_write(_tagged_union(None, batch), keys), lake.uri(staged), tf=tf)
-    existing = []
-    for leaf in lake.leaves(staged, keys):
-        if lake.fs.exists(lake.path(leaf)):
-            existing.append(leaf)
-        else:
-            _publish(lake, f"{staged}/{leaf}", leaf, replace=False)
-    if not existing:
-        return
-    lake_dirs = [lake.uri(leaf) for leaf in existing]
-    staged_dirs = [lake.uri(f"{staged}/{leaf}") for leaf in existing]
-    # Footers merged over exactly the files the merge reads (each leaf is
-    # its own base path here, so no partition column is inferred); the
-    # partition columns keep the batch's types: inferring them from a
-    # subset of directory names would turn ticker=007 into 7.
-    data = spark.read.option("mergeSchema", True).parquet(*lake_dirs, *staged_dirs).schema
-    schema = StructType([*data.fields, *(batch.schema[k] for k in keys)])
-    old = spark.read.schema(schema).option("basePath", lake.root).parquet(*lake_dirs)
-    new = spark.read.schema(schema).option("basePath", lake.uri(staged)).parquet(*staged_dirs)
-    write_lake(_dedup_for_write(_tagged_union(old, new), keys), lake.uri(merged), tf=tf)
-    for leaf in existing:
-        _publish(lake, f"{merged}/{leaf}", leaf, replace=True)
-
-
-def _publish(lake: _LakeFS, src: str, dst: str, replace: bool) -> None:
-    """Move the staged leaf ``src`` to the lake leaf ``dst`` (both
-    relative to the lake root) by rename, first deleting ``dst`` when
-    ``replace``, else creating its parent."""
-    target = lake.path(dst)
-    if replace:
-        lake.fs.delete(target, True)
-    else:
-        lake.fs.mkdirs(target.getParent())
-    if not lake.fs.rename(lake.path(src), target):
-        raise OSError(f"could not rename {src} to {dst} under {lake.root}")
 
 
 def stream_ingest_bars(

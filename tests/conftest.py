@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -22,6 +23,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+_job_groups = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs it started)``, counted by a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def file_snapshot(root) -> dict[str, tuple[int, int]]:
+    """Every file under ``root``: relative path -> (size, mtime_ns)."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.relpath(os.path.join(d, n), root)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
 # Modules dominated by inherently slow work — streaming drains/restarts,

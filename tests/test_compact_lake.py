@@ -7,6 +7,8 @@ import datetime as dt
 import glob
 import os
 
+from pyspark.sql import functions as F
+
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
     compact_lake,
     read_lake,
@@ -106,16 +108,56 @@ def test_write_lake_in_file_ordering_with_multi_partition_tasks(spark, tmp_path)
 
 def test_compact_lake_compacts_a_null_partition(spark, tmp_path):
     """A null partition value (``ticker=__HIVE_DEFAULT_PARTITION__``)
-    reads back as NULL; the compaction's partition selection is
-    null-safe, so a fragmented null partition is rewritten too."""
+    reads back as NULL and an escaped one (``ticker=BRK%2FA``) lists as
+    its directory name; fragmented partitions of both are rewritten, and
+    so is the escaped partition whose one file is small (its size was
+    looked up under the URL-encoded path Spark reports, which does not
+    exist, so it used to be skipped)."""
     lake = str(tmp_path / "lake")
     write_lake(_bars(spark, "AAA", 2024, 3, 5), lake)  # a typed partition: ticker infers as string
+    write_lake(_bars(spark, "BRK/B", 2024, 3, 5), lake, mode="append")
     for i in range(3):
         write_lake(_bars(spark, None, 2024, 3, 5, base_minute=i * 5), lake, mode="append")
+        write_lake(_bars(spark, "BRK/A", 2024, 3, 5, base_minute=i * 5), lake, mode="append")
     null_dir = os.path.join(lake, "ticker=__HIVE_DEFAULT_PARTITION__", "year=2024", "month=3")
+    escaped_dir = os.path.join(lake, "ticker=BRK%2FA", "year=2024", "month=3")
     assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 3
+    assert len(glob.glob(os.path.join(escaped_dir, "*.parquet"))) == 3
     before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
 
-    assert compact_lake(spark, lake)["partitions_compacted"] == 2  # AAA's one file is small
+    stats = compact_lake(spark, lake)
+    assert stats == {"partitions_compacted": 4, "files_before": 8}  # AAA's and BRK/B's one file are small
     assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 1
+    assert len(glob.glob(os.path.join(escaped_dir, "*.parquet"))) == 1
     assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before
+
+
+def test_compact_lake_keeps_columns_of_newer_files(spark, tmp_path):
+    """The fragmented partition's newer file carries ``vwap``; the
+    lake's first footer does not. Compaction keeps ``vwap``."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 2024, 1, 3), lake)
+    write_lake(_bars(spark, "BBB", 2024, 2, 3), lake, mode="append")
+    write_lake(_bars(spark, "BBB", 2024, 2, 3, base_minute=3).withColumn("vwap", F.col("close") + 0.5), lake, mode="append")
+    before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
+    assert sum(r["vwap"] is not None for r in before) == 3
+
+    assert compact_lake(spark, lake)["partitions_compacted"] == 2
+    assert len(glob.glob(os.path.join(lake, "ticker=BBB", "year=2024", "month=2", "*.parquet"))) == 1
+    assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before
+
+
+def test_compact_lake_keeps_a_numeric_looking_ticker(spark, tmp_path):
+    """A lake whose only ticker is ``007`` infers it as an integer; the
+    compaction reads it with the bar layout's types, so the partition
+    stays ``ticker=007`` (it used to be rewritten as ``ticker=7`` beside
+    the old files)."""
+    lake = str(tmp_path / "lake")
+    for i in range(2):
+        write_lake(_bars(spark, "007", 2024, 3, 5, base_minute=i * 5), lake, mode="append")
+    before = read_lake(spark, lake).orderBy("datetime").collect()
+
+    assert compact_lake(spark, lake)["partitions_compacted"] == 1
+    assert [d for d in os.listdir(lake) if "=" in d] == ["ticker=007"]
+    assert len(glob.glob(os.path.join(lake, "ticker=007", "year=2024", "month=3", "*.parquet"))) == 1
+    assert read_lake(spark, lake).orderBy("datetime").collect() == before

@@ -2,9 +2,10 @@
 partitions is staged and published by rename without reading the lake,
 corrections and replays still merge keep-incoming (also under escaped
 and null partition values) while reading back only the partitions they
-touch, failures leave no staging behind and replay to the one-shot
-result, dedup and write share one shuffle, and no lake writer flips the
-session's partition overwrite mode.
+touch, failures of the shared publish (in the sink, delete and merge)
+leave no staging behind and replay to the one-shot result, dedup and
+write share one shuffle, and no lake writer flips the session's
+partition overwrite mode.
 """
 
 from __future__ import annotations
@@ -19,13 +20,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from polygon_io_data_ingestion_pipeline_spark.plans.lint import plan_text
+from polygon_io_data_ingestion_pipeline_spark.sources import lake as lake_mod
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
     PARTITION_KEYS,
     _lake_layout,
     compact_lake,
+    delete_from_lake,
+    merge_into_lake,
     read_lake,
     write_lake,
 )
+from polygon_io_data_ingestion_pipeline_spark.sources.lease import LOCK_NAME
 from polygon_io_data_ingestion_pipeline_spark.streaming import ingest_stream
 from polygon_io_data_ingestion_pipeline_spark.streaming.ingest_stream import (
     BAR_KEY,
@@ -33,6 +38,7 @@ from polygon_io_data_ingestion_pipeline_spark.streaming.ingest_stream import (
     merge_keep_incoming,
     write_ingest_batch,
 )
+from tests.conftest import file_snapshot, spark_jobs
 
 SCHEMA = "ticker string, ts string, close double, volume long"
 OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
@@ -62,26 +68,11 @@ def _rows(spark, lake):
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
 
 
-def _files(lake) -> dict[str, tuple[int, int]]:
-    """Every file under ``lake``: relative path -> (size, mtime_ns)."""
-    out = {}
-    for d, _, names in os.walk(lake):
-        for n in names:
-            st = os.stat(os.path.join(d, n))
-            out[os.path.relpath(os.path.join(d, n), lake)] = (st.st_size, st.st_mtime_ns)
-    return out
-
-
-def _sink_jobs(spark, group: str, batch, lake) -> tuple[int, list[str]]:
-    """Run the sink under job group ``group``; return its job count and
-    the names of its lake read-back stages (the footer merge)."""
-    spark.sparkContext.setJobGroup(group, group)
-    try:
-        write_ingest_batch(batch, 0, lake, tf="minute")
-    finally:
-        spark.sparkContext._jsc.clearJobGroup()
+def _sink_jobs(spark, batch, lake) -> tuple[int, list[str]]:
+    """Run the sink; return its job count and the names of its lake
+    read-back stages (the footer merge)."""
+    _, jobs = spark_jobs(spark, lambda: write_ingest_batch(batch, 0, lake, tf="minute"))
     st = spark.sparkContext.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
     names = [
         st.getStageInfo(s).name
         for j in jobs
@@ -99,10 +90,10 @@ def test_new_partition_batch_starts_no_read_back_job(spark, tmp_path):
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
 
-    jobs, read_back = _sink_jobs(spark, "sink-new-day", _bars(spark, _day("AAPL", 3) + _day("MSFT", 3)), lake)
+    jobs, read_back = _sink_jobs(spark, _bars(spark, _day("AAPL", 3) + _day("MSFT", 3)), lake)
     assert jobs <= 2 and read_back == []
     fix = _bars(spark, [("AAPL", "2024-01-03 14:00:00", 99.0, 1)])
-    jobs, read_back = _sink_jobs(spark, "sink-correction", fix, lake)
+    jobs, read_back = _sink_jobs(spark, fix, lake)
     assert jobs <= 5 and read_back  # the control: a correction does read back
     assert len(_rows(spark, lake)) == 12
     assert not os.path.exists(f"{lake}/{STAGING}")
@@ -201,7 +192,7 @@ def test_new_partition_on_mixed_schema_lake_reads_like_before(spark, tmp_path):
 def test_lease_failure_leaves_lake_untouched(spark, tmp_path, monkeypatch):
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
-    before = _files(lake)
+    before = file_snapshot(lake)
 
     class FailingLease:
         def __init__(self, *args, **kwargs):
@@ -216,23 +207,44 @@ def test_lease_failure_leaves_lake_untouched(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ingest_stream, "LakeLease", FailingLease)
     with pytest.raises(TimeoutError):
         write_ingest_batch(_bars(spark, _day("AAPL", 2, close=50.0) + _day("MSFT", 2)), 1, lake, tf="minute")
-    assert _files(lake) == before
+    assert file_snapshot(lake) == before
     assert not os.path.exists(f"{lake}/{STAGING}")
 
 
-@pytest.mark.parametrize("correction", [False, True], ids=["new", "correction"])
-def test_publish_failure_then_replay_matches_one_shot(spark, tmp_path, monkeypatch, correction):
-    """Publishing raises after the first of two leaves: the error
-    propagates, staging is gone, and replaying the batch converges to
-    the lake a one-shot write gives."""
-    failing, ref = str(tmp_path / "failing"), str(tmp_path / "ref")
-    day = 2 if correction else 3
-    batch = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7), ("MSFT", f"2024-01-0{day} 14:02:00", 98.0, 8)])
-    for lake in (failing, ref):
-        write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
-    write_ingest_batch(batch, 1, ref, tf="minute")
+DOCS = [(1, "a", "src0"), (2, "b", "src0"), (3, "c", "src1"), (4, "d", "src1")]
+DOC_SCHEMA = "doc_id long, text string, source string"
 
-    publish, calls = ingest_stream._publish, []
+
+@pytest.mark.parametrize("op", ["new", "correction", "delete", "merge"])
+def test_publish_failure_then_replay_matches_one_shot(spark, tmp_path, monkeypatch, op):
+    """The one publish raises after the first of two leaves, in the sink
+    (a new-day batch and a correction), in delete and in merge: the
+    error propagates, staging is gone, the lease is released, and
+    re-running the operation converges to the lake a one-shot run
+    gives."""
+    failing, ref = str(tmp_path / "failing"), str(tmp_path / "ref")
+    if op in ("new", "correction"):
+        day = 2 if op == "correction" else 3
+        batch = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7), ("MSFT", f"2024-01-0{day} 14:02:00", 98.0, 8)])
+        for lake in (failing, ref):
+            write_ingest_batch(_bars(spark, _day("AAPL", 2) + _day("MSFT", 2)), 0, lake, tf="minute")
+
+        def run(lake):
+            write_ingest_batch(batch, 1, lake, tf="minute")
+    else:
+        for lake in (failing, ref):
+            spark.createDataFrame(DOCS, DOC_SCHEMA).write.partitionBy("source").parquet(lake)
+        keys = spark.createDataFrame([(1,), (3,)], "doc_id long")
+        upd = spark.createDataFrame([(1, "A", "src0"), (3, "C", "src1")], DOC_SCHEMA)
+
+        def run(lake):
+            if op == "delete":
+                delete_from_lake(spark, lake, keys, "doc_id")
+            else:
+                merge_into_lake(spark, lake, upd, "doc_id")
+    run(ref)
+
+    publish, calls = lake_mod._publish, []
 
     def flaky(*args, **kwargs):
         calls.append(args[2])
@@ -240,24 +252,25 @@ def test_publish_failure_then_replay_matches_one_shot(spark, tmp_path, monkeypat
             raise OSError("injected publish failure")
         publish(*args, **kwargs)
 
-    monkeypatch.setattr(ingest_stream, "_publish", flaky)
+    monkeypatch.setattr(lake_mod, "_publish", flaky)
     with pytest.raises(OSError, match="injected"):
-        write_ingest_batch(batch, 1, failing, tf="minute")
+        run(failing)
     assert len(calls) == 2
     assert not os.path.exists(f"{failing}/{STAGING}")
-    monkeypatch.setattr(ingest_stream, "_publish", publish)
+    assert not os.path.exists(f"{failing}/{LOCK_NAME}")
+    monkeypatch.setattr(lake_mod, "_publish", publish)
 
-    write_ingest_batch(batch, 1, failing, tf="minute")  # the replay
+    run(failing)  # the replay
     assert _rows(spark, failing) == _rows(spark, ref)
-    assert len(_rows(spark, ref)) == (6 if correction else 8)
+    assert len(_rows(spark, ref)) == {"new": 8, "correction": 6, "delete": 2, "merge": 4}[op]
 
 
 def test_empty_batch_leaves_lake_unchanged(spark, tmp_path):
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
-    before = _files(lake)
+    before = file_snapshot(lake)
     write_ingest_batch(_bars(spark, _day("AAPL", 2)).limit(0), 1, lake, tf="minute")
-    assert _files(lake) == before
+    assert file_snapshot(lake) == before
 
 
 def test_correction_ignores_corrupt_file_in_untouched_partition(spark, tmp_path):

@@ -19,7 +19,7 @@ def test_lake_delete_and_merge_cli(spark, tmp_path, capsys):
     victims.write.parquet(keys_path)
     assert main([
         "lake", "delete", "--path", lake, "--keys", keys_path,
-        "--key-col", "doc_id", "--partition-cols", "source",
+        "--key-col", "doc_id",
         "--master", "local[2]",
     ]) == 0
     assert "deleted 2 rows" in capsys.readouterr().out
@@ -29,7 +29,7 @@ def test_lake_delete_and_merge_cli(spark, tmp_path, capsys):
     docs.limit(1).withColumn("text", F.lit("PATCHED")).write.parquet(upd_path)
     assert main([
         "lake", "merge", "--path", lake, "--updates", upd_path,
-        "--key-col", "doc_id", "--partition-cols", "source",
+        "--key-col", "doc_id",
         "--master", "local[2]",
     ]) == 0
     out = capsys.readouterr().out

@@ -75,7 +75,7 @@ def test_leased_merge_blocks_until_holder_releases(spark, tmp_path):
 
     def do_merge():
         upd = spark.createDataFrame([(99, "new", "src0")], SCHEMA)
-        merge_into_lake(spark, lake, upd, "doc_id", ["source"])
+        merge_into_lake(spark, lake, upd, "doc_id")
         done.set()
 
     t = threading.Thread(target=do_merge, daemon=True)

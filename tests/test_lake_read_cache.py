@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
-import itertools
 import os
 import shutil
 
@@ -21,10 +20,10 @@ from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
     read_lake,
     write_lake,
 )
+from tests.conftest import spark_jobs
 
 T0 = dt.datetime(2024, 1, 2, 10, 0, 0)
 PARTS = ["ticker", "year", "month"]
-_groups = itertools.count()
 
 
 def _bars(spark, ticker, month, n, vwap=True, close0=100.0):
@@ -46,18 +45,6 @@ def lake(spark, tmp_path):
                .unionByName(_bars(spark, "BBB", 1, 3)), path)
     write_lake(_bars(spark, "BBB", 2, 3, vwap=False), path, mode="append")
     return path
-
-
-def _jobs(spark, fn):
-    """(fn's result, ids of the Spark jobs it started), by job group."""
-    sc = spark.sparkContext
-    group = f"lake-read-cache-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -102,19 +89,19 @@ def test_cached_read_equals_merge_schema_read(spark, lake):
 
 
 def test_hit_starts_no_spark_job(spark, lake):
-    _, miss_jobs = _jobs(spark, lambda: read_lake(spark, lake))
+    _, miss_jobs = spark_jobs(spark, lambda: read_lake(spark, lake))
     assert miss_jobs, "the first read merges footers in a Spark job"
-    df, hit_jobs = _jobs(spark, lambda: read_lake(spark, lake, tickers=["AAA"], start="2024-01-01"))
+    df, hit_jobs = spark_jobs(spark, lambda: read_lake(spark, lake, tickers=["AAA"], start="2024-01-01"))
     assert hit_jobs == []
     assert df.count() == 6
 
 
 def _assert_remerged(spark, path, check):
     """The next read re-merges and passes ``check``; the read after it hits."""
-    df, jobs = _jobs(spark, lambda: read_lake(spark, path))
+    df, jobs = spark_jobs(spark, lambda: read_lake(spark, path))
     assert jobs, "a changed file set must re-merge the schema"
     check(df)
-    again, jobs = _jobs(spark, lambda: read_lake(spark, path))
+    again, jobs = spark_jobs(spark, lambda: read_lake(spark, path))
     assert jobs == [] and again.schema == df.schema
 
 
@@ -133,7 +120,7 @@ def test_write_lake_overwrite_misses(spark, lake):
 def test_merge_into_lake_misses(spark, lake):
     cols = read_lake(spark, lake).columns
     # keyed on datetime: March dates are new to the lake, so both rows insert
-    stats = merge_into_lake(spark, lake, _bars(spark, "CCC", 3, 2).select(*cols), "datetime", PARTS)
+    stats = merge_into_lake(spark, lake, _bars(spark, "CCC", 3, 2).select(*cols), "datetime")
     assert stats["rows_inserted"] == 2
 
     def check(df):
@@ -146,7 +133,7 @@ def test_merge_into_lake_misses(spark, lake):
 def test_delete_emptying_a_partition_misses(spark, lake):
     read_lake(spark, lake)
     keys = spark.createDataFrame([("BBB",)], "ticker string")
-    assert delete_from_lake(spark, lake, keys, "ticker", PARTS) == 6
+    assert delete_from_lake(spark, lake, keys, "ticker") == 6
 
     def check(df):
         assert df.filter("ticker = 'BBB'").count() == 0

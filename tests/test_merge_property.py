@@ -53,7 +53,7 @@ def test_merge_matches_dict_model(spark, base, upd, tmp_path_factory):
         pd.DataFrame(upd, columns=["k", "part", "v"]),
         "k long, part string, v long",
     )
-    stats = merge_into_lake(spark, lake, updates, "k", ["part"])
+    stats = merge_into_lake(spark, lake, updates, "k")
 
     model = {k: (p, v) for k, p, v in base}
     n_upd = sum(1 for k, _, _ in upd if k in model)
