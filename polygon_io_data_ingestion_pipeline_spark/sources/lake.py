@@ -23,8 +23,8 @@ manifest/walk file selection 80-147, thread-pooled reads 284-304):
 
 from __future__ import annotations
 
-import hashlib
 import json
+import re
 import weakref
 from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager, nullcontext
@@ -80,27 +80,59 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
 
 
-def lake_where(tickers: Iterable[str] | None, start: str | None, end: str | None) -> tuple[str, dict]:
-    """``read_lake``'s ticker and time filter as a SQL predicate over
-    ``ticker`` and ``datetime`` plus its bound parameters ("" and {} for
-    no filter). Values never enter the text. The tickers are ONE
+def _ticker_keys(tickers: Iterable[str]) -> list[str]:
+    """``tickers`` as the lake spells them: stripped, upper case, unique,
+    sorted."""
+    return sorted({t.strip().upper() for t in tickers})
+
+
+def lake_args(tickers: Iterable[str] | None, start: str | None, end: str | None) -> dict:
+    """The parameters that bind :func:`lake_where`: every one always
+    present, ``None`` for a filter not given. The tickers are ONE
     parameter, a JSON array, so a 500-ticker load binds as cheaply as a
-    1-ticker one; the optimizer folds it to a literal array, still a
-    partition filter on ``ticker``."""
-    preds, args = [], {}
-    if tickers is not None:
-        args["tickers"] = json.dumps(sorted({t.strip().upper() for t in tickers}))
-        preds.append("array_contains(from_json(:tickers, 'array<string>'), `ticker`)")
-    if start is not None:
-        args["start"] = start
-        preds.append("`datetime` >= to_timestamp(:start)")
-    if end is not None:
-        args["end"] = end
-        bound = "to_timestamp(:end)"
-        if len(str(end)) <= 10:  # date-only -> inclusive through 23:59:59.999999
-            bound += " + INTERVAL 1 DAY - INTERVAL 1 MICROSECOND"
-        preds.append(f"`datetime` <= {bound}")
-    return " AND ".join(preds), args
+    1-ticker one."""
+    return {
+        "tickers": None if tickers is None else json.dumps(_ticker_keys(tickers)),
+        "start": None if start is None else str(start),
+        "end": None if end is None else str(end),
+    }
+
+
+def lake_where(time_parts: tuple[str, ...] = ()) -> str:
+    """``read_lake``'s ticker and time filter as one SQL predicate over
+    ``ticker`` and ``datetime``, bound by :func:`lake_args`. Values never
+    enter the text, and a filter bound to NULL folds away, so the text
+    depends only on the lake. The optimizer folds the tickers to a
+    literal array, a partition filter on ``ticker``. A date-only ``end``
+    is inclusive through 23:59:59.999999 of that day.
+
+    ``time_parts`` names the lake's integer time partition columns
+    (``year``, ``month``[, ``day``]). For them the range also becomes a
+    partition filter: the partition key of each bound is its UTC
+    calendar date, as the lake's writers derive the keys
+    (``csv_bars.normalize_bar_frame``), so a one-month load of a day lake
+    opens one month of files instead of every month of the ticker."""
+    end = (
+        "CASE WHEN length(:end) <= 10 "
+        "THEN to_timestamp(:end) + INTERVAL 1 DAY - INTERVAL 1 MICROSECOND ELSE to_timestamp(:end) END"
+    )
+    preds = [
+        "(:tickers IS NULL OR array_contains(from_json(:tickers, 'array<string>'), `ticker`))",
+        "(:start IS NULL OR `datetime` >= to_timestamp(:start))",
+        f"(:end IS NULL OR `datetime` <= {end})",
+    ]
+    if time_parts:
+        # year * 10000 + month * 100 + day, on the columns and on each bound
+        weights = [100 ** i for i in reversed(range(len(time_parts)))]
+        key = " + ".join(f"`{p}` * {w}" for p, w in zip(time_parts, weights))
+
+        def bound(ts: str) -> str:
+            utc = f"convert_timezone('UTC', {ts})"
+            return " + ".join(f"{p}({utc}) * {w}" for p, w in zip(time_parts, weights))
+
+        preds.append(f"(:start IS NULL OR {key} >= {bound('to_timestamp(:start)')})")
+        preds.append(f"(:end IS NULL OR {key} <= {bound(end)})")
+    return " AND ".join(preds)
 
 
 def read_lake(
@@ -117,34 +149,38 @@ def read_lake(
     (lake_io.py:175-178). Mixed per-file schemas are tolerated via
     mergeSchema (lake_io.py:440-455).
 
-    The merged schema is cached per session, lake path and the session
-    confs that shape parquet schema inference, together with a
-    fingerprint of the file listing it was merged from (sorted file
-    paths + total bytes). While the listing is unchanged, a read reuses
-    the schema and starts no footer-reading job; any added, removed,
-    renamed or resized file re-merges. One limit: a non-Spark writer
-    that rewrites a file in place under the same name AND at the same
-    total byte count is not detected (Spark's commit protocol never
-    does this — every write job gets fresh file names).
+    The lake's merged-schema relation is built once and reused (per
+    session, lake path and the session confs that shape parquet schema
+    inference) while the files it was built from are unchanged. A read
+    naming ``tickers`` checks only the ``ticker=`` directories it names;
+    ``tickers=None``, or a lake whose first partition column is not a
+    string ``ticker``, checks the whole lake. Any data file added,
+    removed or renamed there, or a changed size or modification time,
+    rebuilds the relation (footers merged again). A write to a ticker
+    the read does not name is seen by the first read that names it. A
+    named ticker with no directory reads as empty rows of the lake's
+    schema.
 
     Filter and projection are one parameterized SQL statement (see
     ``lake_where``): one parse and one analysis, and a plan build whose
     py4j round trips do not grow with the tickers, columns or files.
     """
-    df = _read_merged(spark, path)
-    where, args = lake_where(tickers, start, end)
+    tickers = None if tickers is None else _ticker_keys(tickers)  # iterated twice below
+    lake = _lake(spark, path, tickers)
+    df, args = lake.df, lake_args(tickers, start, end)
+    filtered = any(v is not None for v in args.values())
     want = None
     if columns is not None:
         have = set(df.columns)
         want = [sql_ident(c) for c in columns if c in have]  # wanted ∩ available
-    if where or want is not None:
-        where = f" WHERE {where}" if where else ""
+    if filtered or want is not None:
+        where, args = (f" WHERE {lake_where(lake.time_parts)}", args) if filtered else ("", None)
         df = spark.sql(f"SELECT {', '.join(want or ['*'])} FROM {{lake}}{where}", args=args, lake=df)
     return df.select() if want == [] else df  # no wanted column is available: zero columns
 
 
 # Session confs that change what parquet schema inference returns for
-# the same files; each is part of a cached schema's key.
+# the same files; each is part of a cached relation's key.
 _SCHEMA_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -152,41 +188,92 @@ _SCHEMA_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.caseSensitive",
 )
-# session -> {(path, conf values): (merged schema, listing fingerprint)};
-# bounded by the distinct lake paths a session reads, gone with the session.
-_SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# session -> {(lake path, conf values): _Lake}; one entry per lake path
+# (and conf set) a session reads, gone with the session.
+_LAKES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# One record of FileStatus.toString (Hadoop's stable format).
+_STATUS = re.compile(r"path=(.*?); isDirectory=false; length=(\d+);.*?modification_time=(\d+);")
+# What Spark's ExternalCatalogUtils.escapePathName escapes in a partition value.
+_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+_INTEGER = frozenset({"byte", "short", "integer", "long"})
 
 
-def _listing_fingerprint(df: DataFrame) -> tuple[str, int]:
-    """Digest of the sorted file paths plus the file index's total bytes,
-    over the listing the read already made. The paths cross py4j as ONE
-    string joined on the JVM (NUL never occurs in a path): iterating an
-    ``inputFiles()`` array from Python costs a round trip per file."""
-    index = df._jdf.queryExecution().analyzed().relation().location()
-    # a dotted name resolves in one round trip; jvm.scala.collection... costs one per step
-    array_seq = getattr(df.sparkSession._jvm, "scala.collection.immutable.ArraySeq")
-    files = array_seq.unsafeWrapArray(index.inputFiles()).mkString("\0")
-    files = "\n".join(sorted(files.split("\0")))
-    return hashlib.sha256(files.encode()).hexdigest(), int(index.sizeInBytes())
+def _escape(value: str) -> str:
+    """A partition value as Spark names its directory."""
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in value)
 
 
-def _read_merged(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.option("mergeSchema", True).parquet(path)`` without
-    re-merging footers while the lake's file listing is unchanged: a
-    cached schema is read with ``.schema(...)`` (lists files, starts no
-    job) and kept only if the new listing's fingerprint matches the one
-    it was merged from."""
-    entries = _SCHEMA_CACHE.setdefault(spark, {})
-    key = (path, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
-    hit = entries.get(key)
-    if hit is not None:
-        schema, fingerprint = hit
-        df = spark.read.schema(schema).parquet(path)
-        if _listing_fingerprint(df) == fingerprint:
-            return df
-    df = spark.read.option("mergeSchema", True).parquet(path)
-    entries[key] = (df.schema, _listing_fingerprint(df))
-    return df
+def _unescape(name: str) -> str:
+    """The partition value a directory name spells."""
+    return re.sub("%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), name)
+
+
+def _schema_confs(spark: SparkSession) -> tuple:
+    return tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
+class _Lake:
+    """A lake's merged-schema relation, and the data files it was built
+    from by partition directory: the ticker value for a lake whose first
+    partition column is a string ``ticker``, else "" for the whole lake."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.fs = _LakeFS(spark, path)
+        self.df = spark.read.option("mergeSchema", True).parquet(path)
+        relation = self.df._jdf.queryExecution().analyzed().relation()
+        parts = {f["name"]: f["type"] for f in json.loads(relation.partitionSchema().json())["fields"]}
+        self.by_ticker = next(iter(parts), None) == "ticker" and parts["ticker"] == "string"
+        time_parts = [p for p in ("year", "month", "day") if parts.get(p) in _INTEGER]
+        ltz = dict(self.df.dtypes).get("datetime") == "timestamp"
+        self.time_parts = tuple(time_parts) if ltz and time_parts[:2] == ["year", "month"] else ()
+        # recorded from the relation's own listing: a write landing while
+        # it was built can only make the record older than the relation
+        files = relation.location().allFiles()
+        self.files = self._state(files.mkString("\0"))
+        # a listing this code cannot read back, or a ticker directory it
+        # would not find by name, is never reused
+        dirs = {rel.split("/", 1)[0].partition("=")[2] for recs in self.files.values() for rel, _, _ in recs}
+        self.checkable = sum(map(len, self.files.values())) == files.size() and not (
+            self.by_ticker and any(_escape(_unescape(d)) != d for d in dirs)
+        )
+        self.fs._lister  # resolved now, so a reuse pays only for the listing itself
+
+    def _state(self, listing: str) -> dict[str, frozenset]:
+        """Files (path under the lake, bytes, modification time) by
+        partition directory, from a ``mkString`` of FileStatus records."""
+        state: dict[str, set] = {}
+        prefix = self.fs.qualified_root + "/"
+        for m in _STATUS.finditer(listing):
+            if m[1].startswith(prefix):
+                rel = m[1][len(prefix):]
+                key = _unescape(rel.split("/", 1)[0].partition("=")[2]) if self.by_ticker else ""
+                state.setdefault(key, set()).add((rel, int(m[2]), int(m[3])))
+        return {k: frozenset(v) for k, v in state.items()}
+
+    def unchanged(self, tickers: Iterable[str] | None) -> bool:
+        """Whether the directories a read of ``tickers`` names hold the
+        files the relation was built from: one Spark listing of exactly
+        those directories (no job; a ticker the relation has no files for
+        is listed only if its directory exists)."""
+        if not self.checkable:
+            return False
+        if tickers is None or not self.by_ticker:
+            return self._state(self.fs.listing([""])) == self.files
+        named = {t: f"ticker={_escape(t)}" for t in _ticker_keys(tickers)}
+        dirs = [d for t, d in named.items() if t in self.files or self.fs.fs.exists(self.fs.path(d))]
+        now = self._state(self.fs.listing(dirs)) if dirs else {}
+        return all(now.get(t) == self.files.get(t) for t in named)
+
+
+def _lake(spark: SparkSession, path: str, tickers: Iterable[str] | None, confs: tuple | None = None) -> _Lake:
+    """The session's relation of the lake at ``path``, rebuilt unless the
+    directories ``tickers`` names are unchanged since it was built."""
+    entries = _LAKES.setdefault(spark, {})
+    key = (path, confs or _schema_confs(spark))
+    lake = entries.get(key)
+    if lake is None or not lake.unchanged(tickers):
+        lake = entries[key] = _Lake(spark, path)
+    return lake
 
 
 def write_lake_bucketed(
@@ -370,6 +457,34 @@ class _LakeFS:
         return sorted(self.files(rel, keys))
 
     @cached_property
+    def qualified_root(self) -> str:
+        """The root as the paths of Spark's listings start."""
+        return self.fs.makeQualified(self._jroot).toString()
+
+    @cached_property
+    def _lister(self) -> tuple:
+        """What :meth:`listing` calls, resolved on first use."""
+        jvm = self.spark._jvm
+        return (
+            getattr(jvm, "java.util.regex.Pattern").compile("\0").split,
+            getattr(jvm, "org.apache.hadoop.util.StringUtils").stringToPath,
+            getattr(jvm, "org.apache.spark.util.HadoopFSUtils").parallelListLeafFiles,
+            self.spark._jsc.sc(),
+            self.spark._jsc.hadoopConfiguration(),
+        )
+
+    def listing(self, rels: list[str]) -> str:
+        """The data files under the directories ``rels`` ("" for the root)
+        as one string of FileStatus records, listed by the call Spark's
+        file index lists with (so the same files are hidden) and on the
+        driver, never in a job. A directory that does not exist lists
+        nothing (Spark logs a warning)."""
+        split, to_paths, list_leaf_files, sc, conf = self._lister
+        paths = self._array_seq.unsafeWrapArray(to_paths(split("\0".join(map(self.uri, rels)))))
+        # ignore missing files, keep block locations (the file index's default)
+        return list_leaf_files(sc, paths, conf, None, True, False, 2**31 - 1, 0).mkString("\0")
+
+    @cached_property
     def _root_path(self) -> str:
         """The root as a decoded path."""
         return self.fs.makeQualified(self._jroot).toUri().getPath().rstrip("/")
@@ -458,14 +573,22 @@ def _rewrite(
     """Replace the ``touched`` lake leaves with ``out``, their rows after
     the rewrite: ``write`` it into staging, replace each staged leaf the
     lake has, publish each one it lacks, and delete each touched leaf
-    staging did not produce (that partition is now empty)."""
+    staging did not produce (that partition is now empty), with the
+    directories above it that this leaves empty, up to and excluding
+    the lake root."""
     staged = f"{STAGING}/out"
     write(out, lake.uri(staged))
     produced = lake.leaves(staged, keys)
     for leaf in produced:
         _publish(lake, f"{staged}/{leaf}", leaf)
-    for leaf in sorted(set(touched).difference(produced)):
+    emptied = set(touched).difference(produced)
+    for leaf in sorted(emptied):
         lake.fs.delete(lake.path(leaf), True)
+    # one level at a time, so a parent is checked after all its children
+    while emptied := {d.rpartition("/")[0] for d in emptied if "/" in d}:
+        emptied = {
+            d for d in sorted(emptied) if not lake.fs.listStatus(lake.path(d)) and lake.fs.delete(lake.path(d), False)
+        }
 
 
 def _merge_staged(

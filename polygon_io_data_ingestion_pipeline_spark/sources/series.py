@@ -10,12 +10,14 @@ merges become two pruned lake reads and one join.
 
 from __future__ import annotations
 
+import uuid
+import weakref
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .lake import _read_merged, lake_where, sql_ident
+from .lake import _lake, _schema_confs, _ticker_keys, lake_args, lake_where, sql_ident
 
 #: factor_builder's *_split columns -> canonical *_sa aliases
 SPLIT_TO_SA = {
@@ -44,11 +46,30 @@ def load_series(
     Day granularity joins on the calendar date (lake_io.py:500-506),
     minute on the exact timestamp (509-511); *_split columns are
     harmonized to *_sa. Both sides are partition-pruned reads, filtered
-    exactly as ``read_lake`` filters them, and the reads, projections
-    and join are one parameterized SQL statement.
+    exactly as ``read_lake`` filters them.
+
+    Both lakes are read through ``read_lake``'s relation cache (so a load
+    checks only the ticker directories it names, and a change there
+    rebuilds that lake's relation). The join over the two cached
+    relations is parsed and its relations resolved once per session and
+    pair of relations, with the filters as named parameters; a load only
+    binds its tickers and bounds to them.
     """
-    where, args = lake_where(tickers, start, end)
-    return _join_sql(_read_merged(spark, unadj_root), _read_merged(spark, adj_root), tf, where, args)
+    tickers = None if tickers is None else _ticker_keys(tickers)  # iterated three times below
+    confs = _schema_confs(spark)
+    un, ad = _lake(spark, unadj_root, tickers, confs), _lake(spark, adj_root, tickers, confs)
+    pairs, key = _SERIES.setdefault(spark, {}), (unadj_root, adj_root, tf)
+    hit = pairs.get(key)
+    if hit is None or hit[0] is not un or hit[1] is not ad:
+        text = _join_text(un.df.columns, ad.df.columns, tf, lake_where(un.time_parts), lake_where(ad.time_parts))
+        hit = pairs[key] = (un, ad, _Template(spark, text, lake_args(None, None, None), un=un.df, ad=ad.df))
+    return hit[2].bind(lake_args(tickers, start, end))
+
+
+# session -> {(unadjusted root, adjusted root, tf): (unadjusted _Lake,
+# adjusted _Lake, join template)}; one entry per series pair a session
+# loads, gone with the session.
+_SERIES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def join_series(un: DataFrame, ad: DataFrame, tf: str) -> DataFrame:
@@ -57,31 +78,62 @@ def join_series(un: DataFrame, ad: DataFrame, tf: str) -> DataFrame:
     (lake_io.py:500-506), on exact timestamp for minute (509-511).
     Exposed separately so the join semantics are oracle-testable
     without lake directories."""
-    return _join_sql(un, ad, tf, "", {})
+    return un.sparkSession.sql(_join_text(un.columns, ad.columns, tf), un=un, ad=ad)
 
 
-def _join_sql(un: DataFrame, ad: DataFrame, tf: str, where: str, args: dict) -> DataFrame:
-    """``join_series`` of ``un`` and ``ad``, each first filtered by the
-    SQL predicate ``where`` (bound by ``args``), as one statement."""
-    have = set(ad.columns)
+def _join_text(un_cols: list[str], ad_cols: list[str], tf: str, un_where: str = "", ad_where: str = "") -> str:
+    """``join_series`` as one SQL text over the placeholders ``{un}`` and
+    ``{ad}`` (frames with the columns ``un_cols`` and ``ad_cols``), each
+    side first filtered by its SQL predicate (none for "")."""
+    have = set(ad_cols)
     adj = {}  # ADJ_COLS order; a missing *_sa column comes from its *_split source
     for c in ADJ_COLS:
         src = c if c in have else _SA_TO_SPLIT.get(c)
         if src in have:
             adj[sql_ident(c)] = sql_ident(src)
-    base = [sql_ident(c) for c in BASE_COLS if c in un.columns]
+    base = [sql_ident(c) for c in BASE_COLS if c in un_cols]
     key = "to_date(`datetime`)" if tf == "day" else "`datetime`"  # calendar date / exact instant
-    filt = f" WHERE {where}" if where else ""
-    return un.sparkSession.sql(
+    return (
         f"SELECT {', '.join([f'l.{c}' for c in base] + [f'r.{c}' for c in adj])} "
-        f"FROM (SELECT {', '.join(base)}, {key} AS `__k` FROM {{un}}{filt}) l "
+        f"FROM (SELECT {', '.join(base)}, {key} AS `__k` FROM {{un}}{f' WHERE {un_where}' if un_where else ''}) l "
         f"LEFT JOIN (SELECT {key} AS `__k`, `ticker` AS `__t`"
-        f"{''.join(f', {src} AS {c}' for c, src in adj.items())} FROM {{ad}}{filt}) r "
-        "ON l.`__k` = r.`__k` AND l.`ticker` = r.`__t`",
-        args=args,
-        un=un,
-        ad=ad,
+        f"{''.join(f', {src} AS {c}' for c, src in adj.items())} FROM {{ad}}"
+        f"{f' WHERE {ad_where}' if ad_where else ''}) r "
+        "ON l.`__k` = r.`__k` AND l.`ticker` = r.`__t`"
     )
+
+
+class _Template:
+    """A SQL text over frames (its ``{name}`` placeholders) with named
+    parameters, parsed and with its relations resolved once; each
+    :meth:`bind` is what ``spark.sql(text, args=...)`` would build, minus
+    the parse, the relation resolution and the temp views (the frames
+    are temp views only while this resolves them)."""
+
+    def __init__(self, spark: SparkSession, text: str, params: Iterable[str], **frames: DataFrame) -> None:
+        self._spark, self._params = spark, list(params)
+        views = {name: f"__series_{name}_{uuid.uuid4().hex}" for name in frames}
+        for name, df in frames.items():
+            df.createOrReplaceTempView(views[name])
+        try:
+            state = spark._jsparkSession.sessionState()
+            self._plan = state.analyzer().execute(state.sqlParser().parsePlan(text.format(**views)))
+        finally:
+            for view in views.values():
+                spark.catalog.dropTempView(view)
+        jvm = spark._jvm
+        self._to_seq = jvm.PythonUtils.toSeq
+        self._names = self._to_seq(self._params)
+        self._literal = getattr(getattr(jvm, "org.apache.spark.sql.catalyst.expressions.Literal$"), "MODULE$").apply
+        self._query = getattr(jvm, "org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery")
+        self._of_rows = getattr(jvm, "org.apache.spark.sql.classic.Dataset").ofRows
+
+    def bind(self, args: dict) -> DataFrame:
+        """The plan with its parameters bound to ``args``: analysis binds
+        the values and resolves only what depended on them."""
+        values = self._to_seq([self._literal(args[p]) for p in self._params])
+        query = self._query(self._plan, self._names, values)
+        return DataFrame(self._of_rows(self._spark._jsparkSession, query), self._spark)
 
 
 SPLIT_DATE_ALIASES = ("execution_date", "effective_date", "split_date", "date")

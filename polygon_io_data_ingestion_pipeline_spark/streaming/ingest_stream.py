@@ -22,6 +22,7 @@ Structured Streaming's file source replaces all of it:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +36,8 @@ from ..sources.lease import LakeLease
 #: bar identity: one row per (ticker, instant) — the reference's
 #: overwrite granularity (ingest.py:289-314 buckets by exactly this).
 BAR_KEY = ["ticker", "datetime"]
+#: the characters that make a Hadoop path a glob
+_WILD = re.compile(r"[*?\[\]{}\\]")
 
 
 def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: str = "day") -> None:
@@ -169,13 +172,23 @@ def stream_ingest_bars(
     per layout-specific glob (batch ``read_bar_flatfiles`` groups by
     header automatically).
     """
+    # A glob wild only in its last component is read as its directory
+    # plus pathGlobFilter: the file source then lists that one directory
+    # per poll, where a glob matching more than
+    # spark.sql.sources.parallelPartitionDiscovery.threshold (32) files
+    # starts a listing job on every poll. Either way only the directory's
+    # own files are read, not those of its subdirectories.
+    source, options = source_glob, {"header": True}
+    folder, _, name = source_glob.rpartition("/")
+    if folder and _WILD.search(name) and not _WILD.search(folder):
+        source, options["pathGlobFilter"] = folder, name
     # File-source streams need an explicit schema: probe it from the
     # current files with a bounded batch read (header only, no data scan).
-    probe = spark.read.option("header", True).csv(source_glob)
-    reader = spark.readStream.schema(probe.schema).option("header", True)
+    probe = spark.read.options(**options).csv(source)
+    reader = spark.readStream.schema(probe.schema).options(**options)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.csv(source_glob)
+    raw = reader.csv(source)
 
     bars = normalize_bar_frame(raw, tf=tf, watchlist=watchlist)
 

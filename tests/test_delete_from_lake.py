@@ -89,6 +89,21 @@ def test_delete_emptying_a_partition_removes_its_files(spark, tmp_path, sf_dir):
     assert after_df.exceptAll(want).count() == 0 and want.exceptAll(after_df).count() == 0
 
 
+def test_delete_emptying_a_ticker_removes_its_directories(spark, tmp_path):
+    """A leaf left empty is deleted with the directories above it that
+    this empties (``ticker=X/year=Y/``, ``ticker=X/``), escaped names
+    too; a directory still holding another partition stays, and so does
+    the lake root."""
+    lake = str(tmp_path / "lake")
+    bars = _bars(spark, "AAPL", 1, range(2)).unionByName(_bars(spark, "BRK/A", 1, range(2)))
+    write_lake(bars.unionByName(_bars(spark, "MSFT", 1, range(2))).unionByName(_bars(spark, "MSFT", 2, range(2))), lake)
+    keys = spark.createDataFrame([("AAPL",), ("BRK/A",)], "ticker string")
+    assert delete_from_lake(spark, lake, keys, "ticker") == 4
+    assert sorted(d for d in os.listdir(lake) if d.startswith("ticker=")) == ["ticker=MSFT"]
+    assert delete_from_lake(spark, lake, spark.createDataFrame([(100.0,), (101.0,)], "close double"), "close") == 4
+    assert [d for d in os.listdir(lake) if "=" in d] == []
+
+
 def test_delete_missing_keys_is_noop(spark, tmp_path):
     docs = table(spark, "/root/testdata/sf0.001", "documents")
     lake = str(tmp_path / "corpus")

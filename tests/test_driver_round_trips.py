@@ -21,7 +21,7 @@ from polygon_io_data_ingestion_pipeline_spark.sources.lake import write_lake
 from polygon_io_data_ingestion_pipeline_spark.sources.series import load_series
 from polygon_io_data_ingestion_pipeline_spark.streaming.ingest_stream import write_ingest_batch
 
-LOAD_BUDGET = 100
+LOAD_BUDGET = 35
 SINK_BUDGET = 350
 BAR_COLS = ("open", "high", "low", "close", "volume", "vwap")
 

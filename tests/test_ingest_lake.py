@@ -141,6 +141,42 @@ def test_streaming_available_now(spark, tmp_path):
     assert read_lake(spark, lake).count() == n1 + 1
 
 
+def _listing_jobs(spark, group: str) -> list[int]:
+    """Ids of the Spark jobs in job group ``group`` that listed files
+    (the parallel listing Spark starts above 32 paths)."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return [
+        job.jobId()
+        for job in map(jobs.apply, range(jobs.size()))
+        if str(job.jobGroup()) == f"Some({group})" and "Listing leaf files" in str(job.description())
+    ]
+
+
+def test_stream_polls_its_folder_without_listing_jobs(spark, tmp_path):
+    """A glob wild only in its last component streams its folder through
+    pathGlobFilter: polling 40 files (over Spark's 32-path parallel
+    listing threshold) starts no listing job, each file is ingested
+    once, and neither a file the pattern does not match nor one in a
+    subfolder is read."""
+    src, lake, ckpt = str(tmp_path / "w"), str(tmp_path / "l"), str(tmp_path / "c")
+    os.makedirs(f"{src}/sub")
+
+    def drop(path, ticker):
+        with gzip.open(path, "wt") as f:
+            f.write("ticker,volume,open,close,high,low,window_start,transactions\n")
+            f.write(f"{ticker},100,1,2,3,0.5,{BASE_NS},1\n")
+
+    for i in range(40):
+        drop(f"{src}/{i:02d}.csv.gz", f"T{i:02d}")
+    drop(f"{src}/late.csv", "SKIP")
+    drop(f"{src}/sub/00.csv.gz", "SUB")
+    q = stream_ingest_bars(spark, f"{src}/*.csv.gz", lake, ckpt, tf="day", max_files_per_trigger=20)
+    q.awaitTermination(300)
+    assert _listing_jobs(spark, str(q.runId)) == []  # the stream's own jobs: its polls and batches
+    got = [r["ticker"] for r in read_lake(spark, lake).select("ticker").collect()]
+    assert sorted(got) == [f"T{i:02d}" for i in range(40)]
+
+
 def _lake_rows(spark, lake):
     df = read_lake(spark, lake)
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))

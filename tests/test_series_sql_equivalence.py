@@ -5,7 +5,8 @@ every bound shape (date-only and timestamp ``end``, ``start`` only, no
 bounds), ticker spelling (``None``, ``[]``, padded lowercase, quotes,
 slashes), adjusted-lake flavour (``*_sa`` or only ``*_split``),
 granularity and ``columns=``; and the ticker filter must still prune
-partitions.
+partitions, and ``start``/``end`` become year/month(/day) partition
+filters without changing a row.
 """
 
 from __future__ import annotations
@@ -179,8 +180,28 @@ def test_split_only_and_minute_loads_match_column_api(spark, lakes, tf):
 
 
 def _partition_filters(df) -> list[str]:
-    text = df._jdf.queryExecution().executedPlan().toString()
-    return re.findall(r"FileScan parquet .*?PartitionFilters: \[(.*?)\], PushedFilters", text)
+    """The PartitionFilters of each FileScan the plan runs, spelled out
+    in full (the plan string cuts a scan's metadata at
+    spark.sql.maxMetadataStringLength characters, and the ticker and
+    derived time filters take more). A dynamic-pruning subquery's copy
+    of a scan is not another scan."""
+    spark, key = df.sparkSession, "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        text = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    filters, subquery = [], None  # indent of the pruning subquery being skipped
+    for line in text.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if subquery is not None and indent <= subquery:
+            subquery = None
+        if subquery is None and re.search(r"Subquery\w*Broadcast", line):
+            subquery = indent
+        found = re.findall(r"FileScan parquet .*?PartitionFilters: \[(.*?)\], PushedFilters", line)
+        filters += found if subquery is None else []
+    return filters
 
 
 def test_ticker_filter_still_prunes_partitions(spark, lakes):
@@ -193,3 +214,50 @@ def test_ticker_filter_still_prunes_partitions(spark, lakes):
         assert len(filters) == scans, filters
         assert all("ticker" in f and "O'NEIL" in f for f in filters), filters
         assert {r["ticker"] for r in df.collect()} == {"O'NEIL"}
+
+
+MONTH = "((year * 100) + month)"
+DAY = "(((year * 10000) + (month * 100)) + day)"
+
+
+@pytest.mark.parametrize(
+    "tf,start,end,preds",
+    [
+        ("day", "2023-01-31", "2023-02-01", [f"{MONTH} >= 202301", f"{MONTH} <= 202302"]),  # month boundary
+        ("day", "2022-12-31 22:00:00", "2023-01-01", [f"{MONTH} >= 202212", f"{MONTH} <= 202301"]),  # year
+        ("day", None, "2023-01-31", [f"{MONTH} <= 202301"]),  # date-only end: through that day, not the next
+        ("day", "2023-02-01 00:00:00", None, [f"{MONTH} >= 202302"]),
+        ("minute", "2023-01-31", "2023-01-31", [f"{DAY} >= 20230131", f"{DAY} <= 20230131"]),
+        ("minute", "2022-12-31", "2023-02-01 00:00:00", [f"{DAY} >= 20221231", f"{DAY} <= 20230201"]),
+    ],
+)
+def test_time_bounds_become_partition_filters(spark, lakes, tf, start, end, preds):
+    """``start``/``end`` add year/month (and day, for a minute lake)
+    predicates on the partition columns, and the rows stay exactly the
+    reference's."""
+    got = read_lake(spark, lakes[tf], ["BRK/A"], start, end)
+    (filters,) = _partition_filters(got)
+    assert sorted(p for p in re.sub(r"#\d+", "", filters).split(", ") if "year" in p and "isnotnull" not in p) == [
+        f"({p})" for p in sorted(preds)
+    ]
+    _assert_same(got, _ref_read_lake(spark, lakes[tf], ["BRK/A"], start, end))
+    load = load_series(spark, lakes[tf], lakes[f"{tf}_sa"], tf, ["BRK/A"], start, end)
+    assert all(f"({p})" in re.sub(r"#\d+", "", f) for f in _partition_filters(load) for p in preds)
+    _assert_same(load, _ref_load_series(spark, lakes[tf], lakes[f"{tf}_sa"], tf, ["BRK/A"], start, end))
+
+
+def test_time_partition_filters_use_the_utc_date_in_any_session_zone(spark, lakes):
+    """The lake's partition keys are UTC calendar fields. In a New York
+    session the bar at 2023-02-01 00:00 UTC (month=2) is on January 31,
+    so a date-only end of 2023-01-31 must keep month 2."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for tf in ("day", "minute"):
+            got = read_lake(spark, lakes[tf], ["aaa"], "2023-01-31", "2023-01-31")
+            want = _ref_read_lake(spark, lakes[tf], ["aaa"], "2023-01-31", "2023-01-31")
+            _assert_same(got, want)
+            assert got.filter("month = 2").count() > 0
+    finally:
+        spark.conf.set(key, old)
