@@ -166,15 +166,6 @@ def incremental_dedup(
 DEFAULT_MAX_DOCS_PER_SHINGLE = 1000
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Rebalance raw documents across the cluster before a row-amplifying
-    map (shingle/token explode + per-shingle hashing) — the shared
-    :func:`..text.spread` (promoted there so the NB/LM/BM25
-    folds apply the same discipline). No-op when the scan already has
-    enough splits (the 100 TB case)."""
-    return spread(df)
-
-
 def shingle_set(
     df: DataFrame,
     text_col: str = "text",
@@ -211,7 +202,7 @@ def shingle_set(
         if tokenizer == "runs"
         else word_shingles(text_col, n)
     )
-    return _spread(df).select(
+    return spread(df).select(
         F.col(id_col),
         F.explode(F.array_distinct(sh)).alias("shingle"),
     )
@@ -613,7 +604,7 @@ def simhash(
         else F.split(F.col(text_col), " ")
     )
     toks = (
-        _spread(df)
+        spread(df)
         .select(F.col(id_col), F.explode(tok_arr).alias("tok"))
         .groupBy(id_col, "tok")
         .agg(F.count("*").alias("w"))
@@ -1156,7 +1147,7 @@ def duplicated_span_removal(
     # operator's dominant per-row cost (interpreted higher-order
     # lambda) and must not serialize on a one-split scan (no-op at
     # scale).
-    base = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
+    base = spread(docs.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), toks.alias("_toks")
     )
     n = F.size("_toks")

@@ -22,7 +22,7 @@ declarative plan:
 Stream-mode conventions preserved exactly (SURVEY §7.4 item 4):
 - TR normalizes only to G_last (no batch renormalization);
 - the dividend prior_base is the *prior trading day's end-of-day close*
-  from the edges table (split-adjusted when use_split_base);
+  from the edges table, split-adjusted;
 - the fallback tries day-1 then day+1 and only when the day's own
   factors are exactly neutral (1.0, 1.0, 1.0).
 """
@@ -59,11 +59,11 @@ def split_factors_from_days(
     days: DataFrame,
     splits: DataFrame,
     edges: DataFrame | None = None,
-    detect_gaps: bool = True,
 ) -> DataFrame:
     """(ticker, event_day, split_price_factor, split_volume_factor) from
-    declared splits reconciled with gap-inferred ones
-    (factor_builder.py:755-828)."""
+    declared splits reconciled with the ratios inferred from the price
+    gaps of ``edges`` (factor_builder.py:755-828; declared only without
+    ``edges``)."""
     declared = (
         align_events_to_days(
             splits.na.drop(subset=["execution_date", "ratio"]),
@@ -74,7 +74,7 @@ def split_factors_from_days(
         .groupBy("ticker", "event_day")
         .agg(F.product("ratio").alias("ratio"))
     )
-    if detect_gaps and edges is not None:
+    if edges is not None:
         inferred = infer_gap_ratios(edges)
         declared = merge_declared_with_inferred(declared, inferred)
     w = Window.partitionBy("ticker").orderBy("event_day")
@@ -93,29 +93,24 @@ def dividend_factors_from_days(
     dividends: DataFrame,
     edges: DataFrame,
     split_factors: DataFrame,
-    use_split_base: bool = True,
 ) -> DataFrame:
     """(ticker, event_day, tr_price_factor) in stream-mode convention:
-    prior_base from the prior day's end-of-day close (split-adjusted if
-    requested), TR normalized only to G_last
-    (factor_builder.py:831-909)."""
+    prior_base from the prior day's split-adjusted end-of-day close, TR
+    normalized only to G_last (factor_builder.py:831-909)."""
     base = days.join(
         edges.select("ticker", "event_day", F.col("last_close").alias("close_eod")),
         ["ticker", "event_day"],
         "left",
     )
-    if use_split_base:
-        base = (
-            base.join(
-                split_factors.select("ticker", "event_day", "split_price_factor"),
-                ["ticker", "event_day"],
-                "left",
-            )
-            .na.fill({"split_price_factor": 1.0})
-            .withColumn("base", F.col("close_eod") * F.col("split_price_factor"))
+    base = (
+        base.join(
+            split_factors.select("ticker", "event_day", "split_price_factor"),
+            ["ticker", "event_day"],
+            "left",
         )
-    else:
-        base = base.withColumn("base", F.col("close_eod"))
+        .na.fill({"split_price_factor": 1.0})
+        .withColumn("base", F.col("close_eod") * F.col("split_price_factor"))
+    )
     w = Window.partitionBy("ticker").orderBy("event_day")
     base = base.withColumn("prior_base", F.lag("base").over(w))
 
@@ -202,8 +197,6 @@ def adjust_minute_bars(
     splits: DataFrame,
     dividends: DataFrame,
     materialize: str = "ohlc",
-    use_split_base: bool = True,
-    detect_gaps: bool = True,
     split_factors: DataFrame | None = None,
     div_factors: DataFrame | None = None,
 ) -> DataFrame:
@@ -232,12 +225,12 @@ def adjust_minute_bars(
     sf = split_factors
     if sf is None:
         sf = split_factors_from_days(
-            days, prep_splits(splits), edges, detect_gaps
+            days, prep_splits(splits), edges
         ).localCheckpoint(eager=False)
     gf = div_factors
     if gf is None:
         gf = dividend_factors_from_days(
-            days, prep_dividends(dividends), edges, sf, use_split_base
+            days, prep_dividends(dividends), edges, sf
         )
     day_keys = px.select("ticker", "event_day").distinct()
     eff = effective_day_factors(day_keys, sf, gf)
@@ -252,8 +245,8 @@ def adjust_minute_bars(
             if c in minute_bars.columns:
                 m = m.withColumn(f"{c}_split", F.col(c) * F.col("split_price_factor"))
     # TR is applied to close_split UNCONDITIONALLY, like the reference
-    # stream writer (factor_builder.py:977-979): use_split_base only
-    # controls the dividend prior_base in the factor build above.
+    # stream writer (factor_builder.py:977-979); the split-adjusted
+    # close enters only the dividend prior_base in the factor build above.
     m = m.withColumn("close_tr", F.col("close_split") * F.col("tr_price_factor"))
     if materialize == "ohlc":
         for c in ("open", "high", "low"):

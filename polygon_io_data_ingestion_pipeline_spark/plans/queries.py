@@ -5868,18 +5868,18 @@ def docs_script_langid(spark: SparkSession, sf: str) -> DataFrame:
 )
 def docs_latin_langid(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.stopwords import predicted_lang_latin
-    from ..operators.dedup import _spread
+    from ..operators.text import spread
 
     bodies = F.array(*[F.lit(t) for t in _LATIN_FIXTURES])
     m = (F.col("doc_id") % 7).cast("int")
-    # _spread before the CPU-heavy per-token fold — the dedup-family
+    # spread before the CPU-heavy per-token fold — the dedup-family
     # discipline: a few dense parquet files otherwise serialize the
     # whole classification on as many tasks (measured round 12: the
     # sf0.1 scan is ONE partition, so the entire fold ran on one core;
     # the map-side cost decomposes tokenize 0.18s / map lookup 0.85s /
     # zip_with fold 0.45s per 5k docs on that core).  No-op at 100 TB
     # where the scan already has thousands of splits.
-    docs = _spread(table(spark, sf, "documents")).select(
+    docs = spread(table(spark, sf, "documents")).select(
         "doc_id", F.element_at(bodies, m + 1).alias("text")
     )
     return docs.select("doc_id", predicted_lang_latin("text").alias("lang"))
@@ -6019,14 +6019,14 @@ def _family_fixture_query(fixtures, predict, score_fn):
     family fixtures replace the corpus text by doc_id % k, classify
     with the coverage floor, surface the winning score."""
     def run(spark: SparkSession, sf: str) -> DataFrame:
-        from ..operators.dedup import _spread
+        from ..operators.text import spread
 
         bodies = F.array(*[F.lit(t) for t in fixtures])
         m = (F.col("doc_id") % len(fixtures)).cast("int")
-        # _spread before the per-token folds (same reasoning as
+        # spread before the per-token folds (same reasoning as
         # docs_latin_langid: a single dense parquet file serializes
         # the whole classification on one task)
-        docs = _spread(table(spark, sf, "documents")).select(
+        docs = spread(table(spark, sf, "documents")).select(
             "doc_id", F.element_at(bodies, m + 1).alias("text")
         )
         return docs.select(

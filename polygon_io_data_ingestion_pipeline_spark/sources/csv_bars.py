@@ -172,30 +172,6 @@ def probe_headers_df(files_df: DataFrame) -> DataFrame:
     return files_df.mapInPandas(probe, "path string, sig string")
 
 
-def _group_lines(sig_df: DataFrame, sig: str) -> DataFrame:
-    """Data lines (header skipped) of every file with this signature,
-    streamed on executors -> DataFrame[value: string]."""
-    import pandas as pd
-
-    def read_lines(batches):
-        import gzip
-
-        for pdf in batches:
-            for path in pdf["path"]:
-                opener = gzip.open if path.endswith(".gz") else open
-                with opener(path, "rt") as f:
-                    f.readline()  # header
-                    chunk = [ln.rstrip("\n") for ln in f]
-                if chunk:
-                    yield pd.DataFrame({"value": chunk})
-
-    return (
-        sig_df.filter(F.col("sig") == sig)
-        .select("path")
-        .mapInPandas(read_lines, "value string")
-    )
-
-
 def _resolved_names(header: tuple[str, ...]) -> list[str]:
     """Header -> output column names: ticker alias + shorthand renames.
 
@@ -213,7 +189,6 @@ def read_bar_flatfiles(
     tf: str = "day",
     only: str | None = None,
     watchlist: Iterable[str] | None = None,
-    distributed_lines: bool = False,
 ) -> DataFrame:
     """CSV.GZ flat files -> normalized bar DataFrame (batch ingest).
 
@@ -227,49 +202,27 @@ def read_bar_flatfiles(
     this stays one job per layout at any corpus size.
 
     Listing and header probing are fully distributed (see
-    :func:`list_flatfiles` / :func:`probe_headers_df`). Two scan modes:
-
-    - default: per-group native ``spark.read.csv``. The driver streams
-      the (sig, path) manifest partition-at-a-time to hand each group
-      its path list — peak driver memory is the path strings themselves,
-      the same O(#files) metadata bound Spark's own FileIndex holds for
-      any scan, with zero driver file I/O.
-    - ``distributed_lines=True``: the driver collects only the DISTINCT
-      signatures (O(#layouts)); each group's files are opened on
-      executors, data lines streamed out via ``mapInPandas`` and parsed
-      JVM-side with ``from_csv``. O(groups) driver memory at any file
-      count — the escape hatch for pathological manifests (tens of
-      millions of files). Slower per byte than the native scan (Python
-      line streaming); bar lines never embed newlines, which this mode
-      assumes.
+    :func:`list_flatfiles` / :func:`probe_headers_df`). Each group is one
+    native ``spark.read.csv``: the driver streams the (sig, path)
+    manifest partition-at-a-time to hand each group its path list —
+    peak driver memory is the path strings themselves, the same
+    O(#files) metadata bound Spark's own FileIndex holds for any scan,
+    with zero driver file I/O.
     """
     from functools import reduce
 
     patterns = [paths] if isinstance(paths, str) else list(paths)
     sig_df = probe_headers_df(list_flatfiles(spark, patterns))
 
+    groups: dict[str, list[str]] = {}
+    for row in sig_df.toLocalIterator():
+        groups.setdefault(row["sig"], []).append(row["path"])
     frames = []
-    if distributed_lines:
-        sigs = sorted(r["sig"] for r in sig_df.select("sig").distinct().collect())
-        for sig in sigs:
-            header = tuple(sig.split(","))
-            names = _resolved_names(header)
-            ddl = ", ".join(f"`{c}` STRING" for c in names)
-            raw = (
-                _group_lines(sig_df, sig)
-                .select(F.from_csv("value", ddl).alias("r"))
-                .select("r.*")
-            )
-            frames.append(normalize_bar_frame(raw, tf=tf, only=only, watchlist=watchlist))
-    else:
-        groups: dict[str, list[str]] = {}
-        for row in sig_df.toLocalIterator():
-            groups.setdefault(row["sig"], []).append(row["path"])
-        for sig in sorted(groups):
-            header = tuple(sig.split(","))
-            raw = spark.read.option("header", True).csv(sorted(groups[sig]))
-            raw = raw.toDF(*_resolved_names(header))
-            frames.append(normalize_bar_frame(raw, tf=tf, only=only, watchlist=watchlist))
+    for sig in sorted(groups):
+        header = tuple(sig.split(","))
+        raw = spark.read.option("header", True).csv(sorted(groups[sig]))
+        raw = raw.toDF(*_resolved_names(header))
+        frames.append(normalize_bar_frame(raw, tf=tf, only=only, watchlist=watchlist))
     if not frames:
         raise FileNotFoundError(f"no flat files match {patterns}")
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)

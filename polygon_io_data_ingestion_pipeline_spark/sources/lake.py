@@ -17,8 +17,10 @@ manifest/walk file selection 80-147, thread-pooled reads 284-304):
 - the manifest is obsolete: partition pruning + parquet row-group
   min/max stats give the same file skipping at query time — the loader
   just pushes ticker/time predicates into the scan;
-- one sorted file per partition (sortWithinPartitions on datetime)
-  preserves the reference's in-file ordering contract.
+- one sorted zstd file per partition (sorted on datetime) preserves the
+  reference's in-file ordering contract; every writer here (the batch
+  writer and the four rewrites) writes through the one layout in
+  ``_write``.
 """
 
 from __future__ import annotations
@@ -40,37 +42,50 @@ from .lease import LakeLease
 PARTITION_KEYS = {"day": ["ticker", "year", "month"], "minute": ["ticker", "year", "month", "day"]}
 
 
+#: The most rows one lake file holds: a partition past it is written as
+#: several sorted files.
+MAX_RECORDS_PER_FILE = 5_000_000
+
+
 def write_lake(df: DataFrame, path: str, tf: str = "day", mode: str = "overwrite") -> None:
     """Write bars as a partitioned zstd parquet lake, one sorted file
     per partition."""
-    keys = PARTITION_KEYS[tf]
+    _write(df, path, PARTITION_KEYS[tf], mode)
+    # Overwrites replace files in place; drop any cached listing of the
+    # target so readers in this session don't chase deleted files.
+    df.sparkSession.catalog.refreshByPath(path)
+
+
+def _write(df: DataFrame, path: str, keys: list[str], mode: str = "overwrite") -> None:
+    """Write ``df`` partitioned by ``keys`` in the lake's one file layout
+    (:func:`_lake_layout`, zstd, at most ``MAX_RECORDS_PER_FILE`` rows a
+    file): the batch writer, the streaming sink, delete, merge and
+    compaction all write through here, so every leaf they write is one
+    sorted file."""
     # Dynamic overwrite is a writer option, not a session conf: later
     # static overwrites in the same session must stay static.
     (
         _lake_layout(df, keys)
         .write.partitionBy(*keys)
         .option("compression", "zstd")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .option("partitionOverwriteMode", "dynamic")
         .mode(mode)
         .parquet(path)
     )
-    # Overwrites replace files in place; drop any cached listing of the
-    # target so readers in this session don't chase deleted files.
-    df.sparkSession.catalog.refreshByPath(path)
 
 
 def _lake_layout(df: DataFrame, keys: list[str]) -> DataFrame:
     """One shuffle by the partition keys, each task's rows sorted by the
-    keys then ``datetime``: one sorted file per partition. Partition keys
-    lead the sort: FileFormatWriter requires its input ordered by the
-    partition columns and would otherwise insert its own (non-stable)
-    sort, destroying the in-file datetime order. ``DISTRIBUTE BY`` /
-    ``SORT BY`` are the same plan nodes as ``repartition`` /
-    ``sortWithinPartitions``, built from one SQL text."""
+    keys then ``datetime`` (when the frame has it): one sorted file per
+    partition. Partition keys lead the sort: FileFormatWriter requires
+    its input ordered by the partition columns and would otherwise
+    insert its own (non-stable) sort, destroying the in-file datetime
+    order. ``DISTRIBUTE BY`` / ``SORT BY`` are the same plan nodes as
+    ``repartition`` / ``sortWithinPartitions``, built from one SQL text."""
     by = ", ".join(map(sql_ident, keys))
-    return df.sparkSession.sql(
-        f"SELECT * FROM {{df}} DISTRIBUTE BY {by} SORT BY {by}, `datetime`", df=df
-    )
+    sort = f"{by}, `datetime`" if "datetime" in df.columns else by
+    return df.sparkSession.sql(f"SELECT * FROM {{df}} DISTRIBUTE BY {by} SORT BY {sort}", df=df)
 
 
 def sql_ident(name: str) -> str:
@@ -222,6 +237,7 @@ class _Lake:
         self.df = spark.read.option("mergeSchema", True).parquet(path)
         relation = self.df._jdf.queryExecution().analyzed().relation()
         parts = {f["name"]: f["type"] for f in json.loads(relation.partitionSchema().json())["fields"]}
+        self.partitions = list(parts)  # in the lake's directory order
         self.by_ticker = next(iter(parts), None) == "ticker" and parts["ticker"] == "string"
         time_parts = [p for p in ("year", "month", "day") if parts.get(p) in _INTEGER]
         ltz = dict(self.df.dtypes).get("datetime") == "timestamp"
@@ -276,6 +292,15 @@ def _lake(spark: SparkSession, path: str, tickers: Iterable[str] | None, confs: 
     return lake
 
 
+def _partitioned(spark: SparkSession, path: str) -> _Lake:
+    """The whole lake's relation, as :func:`read_lake` reads it;
+    ``ValueError`` for a lake with no partition columns."""
+    lake = _lake(spark, path, None)
+    if not lake.partitions:
+        raise ValueError(f"{path} is not a partitioned lake")
+    return lake
+
+
 def write_lake_bucketed(
     df: DataFrame, table_name: str, tf: str = "day", buckets: int = 32, path: str | None = None
 ) -> None:
@@ -304,7 +329,7 @@ def lake_manifest(spark: SparkSession, path: str) -> DataFrame:
     """Per-file (path, ticker, start, end, rows) stats — the reference's
     manifest (ingest.py:345-421) as a one-line aggregate, kept for
     auditability rather than pruning."""
-    df = spark.read.parquet(path).withColumn("__file", F.input_file_name())
+    df = _lake(spark, path, None).df.withColumn("__file", F.input_file_name())
     return df.groupBy("__file").agg(
         F.first("ticker").alias("ticker"),
         F.min("datetime").alias("start"),
@@ -531,16 +556,6 @@ def _publish(lake: _LakeFS, src: str, dst: str) -> None:
         raise OSError(f"could not rename {src} to {dst} under {lake.root}")
 
 
-def _partition_names(lake: _LakeFS, lake_df: DataFrame) -> list[str]:
-    """The partition columns of ``lake_df``, a read of the whole lake, in
-    the lake's directory order."""
-    relation = lake_df._jdf.queryExecution().analyzed().relation()
-    names = [f["name"] for f in json.loads(relation.partitionSchema().json())["fields"]]
-    if not names:
-        raise ValueError(f"{lake.root} is not a partitioned lake")
-    return names
-
-
 def _read_leaves(lake: _LakeFS, keys: list[str], *groups: tuple[str, list[str]]) -> list[DataFrame]:
     """One frame per ``(base, leaves)`` group, ``leaves`` relative to the
     lake directory ``base`` ("" for the root). Footers are merged over
@@ -563,21 +578,15 @@ def _read_leaves(lake: _LakeFS, keys: list[str], *groups: tuple[str, list[str]])
     ]
 
 
-def _rewrite(
-    lake: _LakeFS,
-    keys: list[str],
-    touched: list[str],
-    out: DataFrame,
-    write: Callable[[DataFrame, str], None],
-) -> None:
+def _rewrite(lake: _LakeFS, keys: list[str], touched: list[str], out: DataFrame) -> None:
     """Replace the ``touched`` lake leaves with ``out``, their rows after
-    the rewrite: ``write`` it into staging, replace each staged leaf the
-    lake has, publish each one it lacks, and delete each touched leaf
-    staging did not produce (that partition is now empty), with the
-    directories above it that this leaves empty, up to and excluding
-    the lake root."""
+    the rewrite: write it into staging (:func:`_write`), replace each
+    staged leaf the lake has, publish each one it lacks, and delete each
+    touched leaf staging did not produce (that partition is now empty),
+    with the directories above it that this leaves empty, up to and
+    excluding the lake root."""
     staged = f"{STAGING}/out"
-    write(out, lake.uri(staged))
+    _write(out, lake.uri(staged), keys)
     produced = lake.leaves(staged, keys)
     for leaf in produced:
         _publish(lake, f"{staged}/{leaf}", leaf)
@@ -596,7 +605,6 @@ def _merge_staged(
     staged: str,
     keys: list[str],
     combine: Callable[[DataFrame, DataFrame], DataFrame],
-    write: Callable[[DataFrame, str], None],
     stale: Iterable[str] = (),
 ) -> None:
     """Bring the leaves staged under ``staged`` into the lake: rewrite
@@ -608,7 +616,7 @@ def _merge_staged(
     touched = sorted({*existing, *stale})
     if touched:
         old, new = _read_leaves(lake, keys, ("", touched), (staged, existing))
-        _rewrite(lake, keys, touched, combine(old, new), write)
+        _rewrite(lake, keys, touched, combine(old, new))
     # after the rewrite, which may still read every staged row (a merge's keys)
     for leaf in sorted(set(leaves).difference(existing)):
         _publish(lake, f"{staged}/{leaf}", leaf)
@@ -627,32 +635,29 @@ def _holding(lake: _LakeFS, lake_df: DataFrame, keys: DataFrame, key_col: str) -
     return sorted(map(lake.leaf_of, row[0])), row[1], row[2]
 
 
-def compact_lake(
-    spark: SparkSession,
-    path: str,
-    tf: str = "day",
-    max_records_per_file: int = 5_000_000,
-    small_file_bytes: int = 32 * 1024 * 1024,
-    lease: bool = True,
-) -> dict[str, int]:
-    """Lake maintenance: rewrite partitions fragmented into many small
-    files as one-(or-few)-sorted-files-per-partition — the small-file
-    compaction every long-lived 100 TB lake needs (streaming ingest and
-    frequent backfills each commit a file per trigger per partition,
-    and scan throughput collapses when file count >> row groups).
+def compact_lake(spark: SparkSession, path: str, tf: str = "day", lease: bool = True) -> dict[str, int]:
+    """Lake maintenance: rewrite each partition fragmented into several
+    files as one sorted file — the small-file compaction every
+    long-lived 100 TB lake needs (streaming ingest and frequent appends
+    each commit a file per trigger per partition, and scan throughput
+    collapses when file count >> row groups).
 
-    The plan is a listing, not a scan: the Hadoop FileSystem lists the
-    partition leaves and their files, and a leaf is fragmented when it
-    has more than one file or its one file is under ``small_file_bytes``
-    (one status call per single-file leaf). Only fragmented leaves are
-    read back (footers merged over exactly their files, so a column only
-    newer files carry survives; partition columns as their directory
-    strings, so ``ticker=007`` stays "007") and rewritten through
-    staging, then
-    published by rename; untouched partitions keep their files, so
-    compaction cost is proportional to the fragmentation, not the lake.
-    The rewrite preserves the lake contract (in-file datetime ordering,
-    zstd, ``max_records_per_file`` cap) and is idempotent.
+    Every writer in this module (``write_lake``, the streaming sink,
+    delete and merge) writes each partition it touches in the one lake
+    layout, one sorted zstd file, so compaction only merges fragments:
+    the plan is a listing, not a scan (the Hadoop FileSystem lists the
+    partition leaves and their files), and a leaf is fragmented when it
+    holds more than one data file. A single-file leaf is never
+    rewritten, whatever its size; one written by an older delete or
+    merge (snappy, unsorted) is not re-laid out. Only fragmented leaves
+    are read back (footers merged over exactly their files, so a column
+    only newer files carry survives; partition columns as their
+    directory strings, so ``ticker=007`` stays "007") and rewritten
+    through staging, then published by rename; untouched partitions keep
+    their files, so compaction cost is proportional to the
+    fragmentation, not the lake, and a second run rewrites nothing.
+    A leaf past ``MAX_RECORDS_PER_FILE`` rows is written as several
+    files and rewritten by every run.
 
     Returns {"partitions_compacted": n, "files_before": m}.
 
@@ -664,26 +669,12 @@ def compact_lake(
     (tests/test_lake_lease.py proves the race on the raw primitives).
     """
     keys = PARTITION_KEYS[tf]
-
-    def write(df: DataFrame, out: str) -> None:
-        (
-            _lake_layout(df, keys)
-            .write.partitionBy(*keys)
-            .option("compression", "zstd")
-            .option("maxRecordsPerFile", max_records_per_file)
-            .parquet(out)
-        )
-
     with _lease(spark, path, "compact_lake", lease), _staging(spark, path) as lake:
         files = lake.files("", keys)
-        todo = [
-            leaf
-            for leaf, names in sorted(files.items())
-            if len(names) > 1 or lake.fs.getFileStatus(lake.path(f"{leaf}/{names[0]}")).getLen() < small_file_bytes
-        ]
+        todo = [leaf for leaf, names in sorted(files.items()) if len(names) > 1]
         if todo:
             (old,) = _read_leaves(lake, keys, ("", todo))
-            _rewrite(lake, keys, todo, old, write)
+            _rewrite(lake, keys, todo, old)
     return {"partitions_compacted": len(todo), "files_before": sum(map(len, files.values()))}
 
 
@@ -698,32 +689,33 @@ def delete_from_lake(
     takedown / right-to-be-forgotten primitive a training-data store
     must serve (copyright removals, PII erasure, opt-outs).
 
-    Without a table format the unit of rewrite is the partition. One
-    aggregate over the lake's key column and file directories finds the
+    Without a table format the unit of rewrite is the partition. The
+    lake is read as :func:`read_lake` reads it (footers merged over
+    every file, so a key column only newer files carry resolves). One
+    aggregate over its key column and file directories finds the
     partition leaves that hold a key (and counts the rows to delete);
     only those leaves are read back (footers merged over exactly their
     files, partition columns as their directory strings), the keys are
-    anti-joined out, and the survivors are written into staging and
-    published by rename. A leaf left with no rows is deleted, so a
-    takedown of a whole partition leaves no file behind. Untouched
-    partitions keep their files byte-for-byte (mtime-asserted in tests)
-    — at 100 TB a deletion of k documents costs the partitions they
-    live in, not the lake. The partition columns are the lake's own
-    (``ValueError`` for an unpartitioned lake). Returns the number of
-    rows deleted.
+    anti-joined out, and the survivors are written into staging in the
+    lake's one layout (one sorted zstd file per partition, as
+    ``write_lake`` writes) and published by rename. A leaf left with no
+    rows is deleted, so a takedown of a whole partition leaves no file
+    behind. Untouched partitions keep their files byte-for-byte
+    (mtime-asserted in tests) — at 100 TB a deletion of k documents
+    costs the partitions they live in, not the lake. The partition
+    columns are the lake's own (``ValueError`` for an unpartitioned
+    lake). Returns the number of rows deleted.
 
     Serialized behind the lake's maintenance lease (``lease=False``
     opts out when the caller already holds it).
     """
     with _lease(spark, path, "delete_from_lake", lease), _staging(spark, path) as lake:
-        lake_df = spark.read.parquet(path)
-        names = _partition_names(lake, lake_df)
+        table = _partitioned(spark, path)
         keys = F.broadcast(keys_df.select(key_col))
-        touched, n_deleted, _ = _holding(lake, lake_df, keys, key_col)
+        touched, n_deleted, _ = _holding(lake, table.df, keys, key_col)
         if touched:
-            (old,) = _read_leaves(lake, names, ("", touched))
-            kept = old.join(keys, key_col, "left_anti")
-            _rewrite(lake, names, touched, kept, lambda df, out: df.write.partitionBy(*names).parquet(out))
+            (old,) = _read_leaves(lake, table.partitions, ("", touched))
+            _rewrite(lake, table.partitions, touched, old.join(keys, key_col, "left_anti"))
     return n_deleted
 
 
@@ -740,36 +732,39 @@ def merge_into_lake(
     keys the lake has never seen are inserted. Copy-on-write at
     partition granularity, the additive twin of :func:`delete_from_lake`.
 
-    The updates are written into staging first (so they are computed
-    once). A staged partition leaf the lake lacks is published by
-    rename and nothing is read for it. The leaves rewritten are exactly
-    (a) the lake leaves the other staged leaves land on and (b) the
-    leaves holding a stale version of an updated key, found by one
-    aggregate over the lake's key column and file directories. They are
-    read back (footers merged over exactly their files and the staged
-    ones, partition columns as their directory strings), the updated
-    keys are anti-joined out, the staged rows added,
-    and the result is written into staging and published by rename. A
-    leaf left with no rows (its only key moved elsewhere) is deleted.
+    The lake is read as :func:`read_lake` reads it (footers merged over
+    every file). The updates are written into staging first (so they
+    are computed once), in the lake's one layout: a staged partition
+    leaf the lake lacks is published by rename as one sorted zstd file,
+    and nothing is read for it. The leaves rewritten are exactly (a) the
+    lake leaves the other staged leaves land on and (b) the leaves
+    holding a stale version of an updated key, found by one aggregate
+    over the lake's key column and file directories. They are read back
+    (footers merged over exactly their files and the staged ones,
+    partition columns as their directory strings), the updated keys are
+    anti-joined out, the staged rows added, and the result is written
+    into staging in the same layout and published by rename. A leaf
+    left with no rows (its only key moved elsewhere) is deleted.
     Untouched partitions keep their files byte-for-byte. The partition
     columns are the lake's own (``ValueError`` for an unpartitioned
     lake).
 
     ``updates`` must carry the full lake row (data + partition columns;
-    a data column the lake has is cast to the lake's type, so the files
-    of a leaf agree) and at most one row per key — upsert with multiple
-    versions per key is ambiguous; pre-dedup with keep-last if needed.
-    Returns ``{"rows_updated": ..., "rows_inserted": ...}`` counted in KEYS
-    (a lake row duplicated per key collapses to the one update row and
-    still counts once).  Serialized behind the lake's maintenance lease
-    (``lease=False`` opts out when the caller already holds it).
+    a data column the lake has, in any of its files, is cast to the
+    lake's type, so the files of a leaf agree) and at most one row per
+    key — upsert with multiple versions per key is ambiguous; pre-dedup
+    with keep-last if needed. Returns ``{"rows_updated": ...,
+    "rows_inserted": ...}`` counted in KEYS (a lake row duplicated per
+    key collapses to the one update row and still counts once).
+    Serialized behind the lake's maintenance lease (``lease=False`` opts
+    out when the caller already holds it).
     """
     with _lease(spark, path, "merge_into_lake", lease), _staging(spark, path) as lake:
-        lake_df = spark.read.parquet(path)
-        keys, staged = _partition_names(lake, lake_df), f"{STAGING}/updates"
-        types = {f.name: f.dataType for f in lake_df.schema.fields if f.name not in keys}
+        table = _partitioned(spark, path)
+        keys, staged = table.partitions, f"{STAGING}/updates"
+        types = {f.name: f.dataType for f in table.df.schema.fields if f.name not in keys}
         updates = updates.select(*(F.col(c).cast(types[c]) if c in types else F.col(c) for c in updates.columns))
-        updates.write.partitionBy(*keys).parquet(lake.uri(staged))
+        _write(updates, lake.uri(staged), keys)
         # the staged files' own schema: the one they were just written with
         schema = StructType([*updates.drop(*keys).schema.fields, *(StructField(k, StringType()) for k in keys)])
         incoming = (
@@ -778,14 +773,13 @@ def merge_into_lake(
             .parquet(lake.uri(staged))
         )
         updated = F.broadcast(incoming.select(key_col))
-        stale, _, n_updated = _holding(lake, lake_df, updated, key_col)
+        stale, _, n_updated = _holding(lake, table.df, updated, key_col)
         n_inserted = incoming.count() - n_updated
         _merge_staged(
             lake,
             staged,
             keys,
             lambda old, new: old.join(updated, key_col, "left_anti").unionByName(new),
-            lambda df, out: df.write.partitionBy(*keys).parquet(out),
             stale=stale,
         )
     return {"rows_updated": n_updated, "rows_inserted": n_inserted}

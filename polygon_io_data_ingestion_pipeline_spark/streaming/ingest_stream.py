@@ -90,13 +90,7 @@ def write_ingest_batch(batch_df: DataFrame, batch_id: int, lake_path: str, tf: s
     with LakeLease(spark, lake_path, holder="ingest_stream"), _staging(spark, lake_path) as lake:
         keys, staged = PARTITION_KEYS[tf], f"{STAGING}/batch"
         write_lake(_dedup_for_write(_tagged_union(None, batch_df), keys), lake.uri(staged), tf=tf)
-        _merge_staged(
-            lake,
-            staged,
-            keys,
-            lambda old, new: _dedup_for_write(_tagged_union(old, new), keys),
-            lambda df, path: write_lake(df, path, tf=tf),
-        )
+        _merge_staged(lake, staged, keys, lambda old, new: _dedup_for_write(_tagged_union(old, new), keys))
 
 
 def merge_keep_incoming(
@@ -183,8 +177,10 @@ def stream_ingest_bars(
     if folder and _WILD.search(name) and not _WILD.search(folder):
         source, options["pathGlobFilter"] = folder, name
     # File-source streams need an explicit schema: probe it from the
-    # current files with a bounded batch read (header only, no data scan).
-    probe = spark.read.options(**options).csv(source)
+    # header of one matching file (every file has the same header). A
+    # read over every match would build a relation over each file, which
+    # starts a listing job above 32 files.
+    probe = spark.read.option("header", True).csv(_header_source(spark, source_glob))
     reader = spark.readStream.schema(probe.schema).options(**options)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -199,3 +195,16 @@ def stream_ingest_bars(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _header_source(spark: SparkSession, pattern: str) -> str:
+    """The first data file the Hadoop glob ``pattern`` matches itself
+    (driver-side, no job), a hidden (``_``/``.``) name left out as
+    Spark's readers leave it out, with its glob characters escaped; or
+    ``pattern`` when it matches no file itself (a directory, or no
+    match)."""
+    path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(pattern)
+    for status in path.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(path) or []:
+        if status.isFile() and not status.getPath().getName().startswith(("_", ".")):
+            return _WILD.sub(r"\\\g<0>", status.getPath().toString())
+    return pattern

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import glob
 import itertools
 import os
 import sys
@@ -49,6 +50,22 @@ def file_snapshot(root) -> dict[str, tuple[int, int]]:
             st = os.stat(os.path.join(d, n))
             out[os.path.relpath(os.path.join(d, n), root)] = (st.st_size, st.st_mtime_ns)
     return out
+
+
+def assert_laid_out(leaf) -> None:
+    """The partition directory ``leaf`` holds the lake's file layout: one
+    data file, zstd in every column chunk, rows sorted by ``datetime``."""
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(leaf, "*.parquet"))
+    assert len(files) == 1, files
+    meta = pq.ParquetFile(files[0]).metadata
+    codecs = {
+        meta.row_group(g).column(c).compression for g in range(meta.num_row_groups) for c in range(meta.num_columns)
+    }
+    assert codecs == {"ZSTD"}, codecs
+    ts = pq.read_table(files[0], columns=["datetime"]).column("datetime").to_pylist()
+    assert ts == sorted(ts), ts
 
 
 # Modules dominated by inherently slow work — streaming drains/restarts,
@@ -119,7 +136,6 @@ SLOW_MODULES = {
     "test_pq",
     "test_neardup_recall",
     "test_knn_join_recall",
-    "test_minute_path",
     "test_zorder_lake",
     "test_diff_property",
     "test_funnel",

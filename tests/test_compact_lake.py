@@ -1,12 +1,15 @@
 """Lake compaction: fragmented partitions collapse to one sorted file,
-data is bit-identical, and already-healthy partitions are left alone."""
+data is bit-identical, and single-file partitions (every partition a
+lake writer leaves) are left alone, so a second run rewrites nothing."""
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import glob
 import os
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
@@ -14,6 +17,7 @@ from polygon_io_data_ingestion_pipeline_spark.sources.lake import (
     read_lake,
     write_lake,
 )
+from tests.conftest import assert_laid_out, file_snapshot
 
 T0 = dt.datetime(2024, 1, 2, 10, 0, 0)
 
@@ -63,15 +67,12 @@ def test_compact_lake_merges_fragments_and_preserves_data(spark, tmp_path):
     ts = [r["datetime"] for r in bbb]
     assert ts == sorted(ts)
 
-    # a second compaction is a no-op for the now-healthy big partition
-    # (AAA was single-file and large enough only if above the small-file
-    # threshold; with tiny fixtures everything is "small", so instead
-    # assert idempotency: re-running changes nothing further)
-    again = compact_lake(spark, lake)
+    # a second compaction rewrites nothing: every partition is one file
+    assert compact_lake(spark, lake)["partitions_compacted"] == 0
     final = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
     assert final == before
     assert len(files("BBB", 2024, 2)) == 1
-    assert aaa_mtime  # fixture sanity
+    assert aaa_mtime and {f: os.path.getmtime(f) for f in files("AAA", 2024, 1)} == aaa_mtime
 
 
 def test_write_lake_in_file_ordering_with_multi_partition_tasks(spark, tmp_path):
@@ -110,9 +111,7 @@ def test_compact_lake_compacts_a_null_partition(spark, tmp_path):
     """A null partition value (``ticker=__HIVE_DEFAULT_PARTITION__``)
     reads back as NULL and an escaped one (``ticker=BRK%2FA``) lists as
     its directory name; fragmented partitions of both are rewritten, and
-    so is the escaped partition whose one file is small (its size was
-    looked up under the URL-encoded path Spark reports, which does not
-    exist, so it used to be skipped)."""
+    the single-file partitions (one of them escaped) keep their files."""
     lake = str(tmp_path / "lake")
     write_lake(_bars(spark, "AAA", 2024, 3, 5), lake)  # a typed partition: ticker infers as string
     write_lake(_bars(spark, "BRK/B", 2024, 3, 5), lake, mode="append")
@@ -124,9 +123,11 @@ def test_compact_lake_compacts_a_null_partition(spark, tmp_path):
     assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 3
     assert len(glob.glob(os.path.join(escaped_dir, "*.parquet"))) == 3
     before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
+    single = {t: file_snapshot(os.path.join(lake, t)) for t in ("ticker=AAA", "ticker=BRK%2FB")}
 
     stats = compact_lake(spark, lake)
-    assert stats == {"partitions_compacted": 4, "files_before": 8}  # AAA's and BRK/B's one file are small
+    assert stats == {"partitions_compacted": 2, "files_before": 8}
+    assert {t: file_snapshot(os.path.join(lake, t)) for t in single} == single
     assert len(glob.glob(os.path.join(null_dir, "*.parquet"))) == 1
     assert len(glob.glob(os.path.join(escaped_dir, "*.parquet"))) == 1
     assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before
@@ -142,7 +143,7 @@ def test_compact_lake_keeps_columns_of_newer_files(spark, tmp_path):
     before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
     assert sum(r["vwap"] is not None for r in before) == 3
 
-    assert compact_lake(spark, lake)["partitions_compacted"] == 2
+    assert compact_lake(spark, lake)["partitions_compacted"] == 1
     assert len(glob.glob(os.path.join(lake, "ticker=BBB", "year=2024", "month=2", "*.parquet"))) == 1
     assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before
 
@@ -161,3 +162,36 @@ def test_compact_lake_keeps_a_numeric_looking_ticker(spark, tmp_path):
     assert [d for d in os.listdir(lake) if "=" in d] == ["ticker=007"]
     assert len(glob.glob(os.path.join(lake, "ticker=007", "year=2024", "month=3", "*.parquet"))) == 1
     assert read_lake(spark, lake).orderBy("datetime").collect() == before
+
+
+def test_compact_lake_leaves_a_fresh_lake_alone(spark, tmp_path):
+    """``write_lake`` writes each partition as one sorted file, so
+    compaction has nothing to do: every file keeps its name and mtime."""
+    lake = str(tmp_path / "lake")
+    bars = [_bars(spark, t, 2024, m, 5) for t in ("AAA", "BBB", "CCC") for m in (1, 2)]
+    write_lake(functools.reduce(DataFrame.unionByName, bars).repartition(3), lake)
+    before = file_snapshot(lake)
+
+    assert compact_lake(spark, lake) == {"partitions_compacted": 0, "files_before": 6}
+    assert file_snapshot(lake) == before
+
+
+def test_compact_lake_compacts_exactly_the_fragmented_leaves(spark, tmp_path):
+    """Appends fragment two of four partitions; compaction rewrites
+    exactly those two into the lake layout and no other file."""
+    lake = str(tmp_path / "lake")
+    bars = [_bars(spark, t, 2024, m, 5) for t in ("AAA", "BBB") for m in (1, 2)]
+    write_lake(functools.reduce(DataFrame.unionByName, bars), lake)
+    write_lake(_bars(spark, "AAA", 2024, 2, 5, base_minute=5), lake, mode="append")
+    write_lake(_bars(spark, "BBB", 2024, 1, 5, base_minute=5), lake, mode="append")
+    fragmented = [os.path.join("ticker=AAA", "year=2024", "month=2"), os.path.join("ticker=BBB", "year=2024", "month=1")]
+    healthy = {f: st for f, st in file_snapshot(lake).items() if not f.startswith(tuple(fragmented))}
+    before = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
+
+    assert compact_lake(spark, lake) == {"partitions_compacted": 2, "files_before": 6}
+    after = file_snapshot(lake)
+    assert {f: after.get(f) for f in healthy} == healthy
+    for leaf in fragmented:
+        assert_laid_out(os.path.join(lake, leaf))
+    assert read_lake(spark, lake).orderBy("ticker", "datetime").collect() == before
+    assert compact_lake(spark, lake)["partitions_compacted"] == 0

@@ -1,8 +1,9 @@
 """Takedown deletion: targeted keys disappear, everything else survives
 byte-for-byte, and untouched partitions are NOT rewritten. A partition
 left empty loses its files, also under an escaped value; the survivors
-keep every column their files carry; the delete starts a bounded
-number of Spark jobs."""
+keep every column their files carry and are written in the lake's one
+layout; a key column only newer files carry resolves; the delete starts
+a bounded number of Spark jobs."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 
 from polygon_io_data_ingestion_pipeline_spark.sources import table
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import delete_from_lake, read_lake, write_lake
-from tests.conftest import file_snapshot, spark_jobs
+from tests.conftest import assert_laid_out, file_snapshot, spark_jobs
 
 
 def test_delete_rewrites_only_touched_partitions(spark, tmp_path):
@@ -160,6 +161,34 @@ def test_delete_keeps_columns_of_newer_files(spark, tmp_path):
     got = read_lake(spark, lake).filter("ticker = 'BBB'").orderBy("datetime").collect()
     assert [(r["close"], r["vwap"]) for r in got] == [
         (101.0, None), (102.0, None), (103.0, 103.5), (104.0, 104.5), (105.0, 105.5),
+    ]
+
+
+def test_delete_writes_the_touched_leaf_in_the_lake_layout(spark, tmp_path):
+    """The survivors of a touched partition are one zstd file sorted by
+    ``datetime``, as ``write_lake`` writes it."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 1, range(8)).unionByName(_bars(spark, "BBB", 1, range(3))).repartition(3), lake)
+    keys = spark.createDataFrame([(T0.replace(month=1) + dt.timedelta(minutes=1),)], "datetime timestamp")
+
+    assert delete_from_lake(spark, lake, keys, "datetime") == 2
+    for ticker in ("AAA", "BBB"):
+        assert_laid_out(os.path.join(lake, f"ticker={ticker}", "year=2024", "month=1"))
+
+
+def test_delete_keys_on_a_column_only_newer_files_carry(spark, tmp_path):
+    """``doc_id`` is in the files of ``ticker=BBB`` only. The delete reads
+    the lake as ``read_lake`` does (every footer merged), so the key
+    resolves; a one-footer read used to fail with UNRESOLVED_COLUMN."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 1, range(3)), lake)
+    write_lake(_bars(spark, "BBB", 2, range(3)).withColumn("doc_id", F.col("close").cast("long")), lake, mode="append")
+    assert "doc_id" in read_lake(spark, lake).columns
+
+    assert delete_from_lake(spark, lake, spark.createDataFrame([(101,)], "doc_id long"), "doc_id") == 1
+    got = read_lake(spark, lake).orderBy("ticker", "datetime").collect()
+    assert [(r["ticker"], r["close"], r["doc_id"]) for r in got] == [
+        ("AAA", 100.0, None), ("AAA", 101.0, None), ("AAA", 102.0, None), ("BBB", 100.0, 100), ("BBB", 102.0, 102),
     ]
 
 

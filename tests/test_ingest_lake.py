@@ -24,6 +24,7 @@ from polygon_io_data_ingestion_pipeline_spark.streaming import (
     stream_ingest_bars,
     write_ingest_batch,
 )
+from tests.conftest import spark_jobs
 
 NS_DAY = 86_400_000_000_000
 BASE_NS = 1_704_153_600_000_000_000  # 2024-01-02 00:00:00 UTC in ns
@@ -94,24 +95,6 @@ def test_batch_ingest_roundtrip(spark, tmp_path):
     assert all(r["start"] <= r["end"] for r in mani)
 
 
-def test_distributed_lines_mode_matches_native_scan(spark, tmp_path):
-    """O(groups)-driver-memory mode: executor-side line streaming +
-    JVM from_csv parse must produce exactly the native per-group scan's
-    rows (mixed headers, mixed epoch units)."""
-    src = str(tmp_path / "src")
-    _write_flatfiles(src)
-    pat = f"{src}/*/*/*.csv.gz"
-
-    native = read_bar_flatfiles(spark, pat, tf="day").collect()
-    dist = read_bar_flatfiles(spark, pat, tf="day", distributed_lines=True).collect()
-
-    key = lambda r: (r["ticker"], r["datetime"])  # noqa: E731
-    assert sorted(map(tuple, dist), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, native), key=lambda t: (t[0], t[1])
-    )
-    assert len({key(r) for r in native}) == len(native)
-
-
 def test_missing_path_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         read_bar_flatfiles(spark, f"{tmp_path}/nowhere/*.csv.gz")
@@ -141,21 +124,18 @@ def test_streaming_available_now(spark, tmp_path):
     assert read_lake(spark, lake).count() == n1 + 1
 
 
-def _listing_jobs(spark, group: str) -> list[int]:
-    """Ids of the Spark jobs in job group ``group`` that listed files
-    (the parallel listing Spark starts above 32 paths)."""
-    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-    return [
-        job.jobId()
-        for job in map(jobs.apply, range(jobs.size()))
-        if str(job.jobGroup()) == f"Some({group})" and "Listing leaf files" in str(job.description())
-    ]
+def _listing_jobs(spark, ids) -> list[int]:
+    """Those of the Spark jobs ``ids`` that listed files (the parallel
+    listing Spark starts above 32 paths)."""
+    status = spark.sparkContext._jsc.sc().statusStore()
+    return [i for i in ids if "Listing leaf files" in str(status.job(i).description())]
 
 
 def test_stream_polls_its_folder_without_listing_jobs(spark, tmp_path):
     """A glob wild only in its last component streams its folder through
-    pathGlobFilter: polling 40 files (over Spark's 32-path parallel
-    listing threshold) starts no listing job, each file is ingested
+    pathGlobFilter: starting the stream (its schema is probed from one
+    file's header) and polling 40 files (over Spark's 32-path parallel
+    listing threshold) start no listing job, each file is ingested
     once, and neither a file the pattern does not match nor one in a
     subfolder is read."""
     src, lake, ckpt = str(tmp_path / "w"), str(tmp_path / "l"), str(tmp_path / "c")
@@ -170,9 +150,13 @@ def test_stream_polls_its_folder_without_listing_jobs(spark, tmp_path):
         drop(f"{src}/{i:02d}.csv.gz", f"T{i:02d}")
     drop(f"{src}/late.csv", "SKIP")
     drop(f"{src}/sub/00.csv.gz", "SUB")
-    q = stream_ingest_bars(spark, f"{src}/*.csv.gz", lake, ckpt, tf="day", max_files_per_trigger=20)
+    q, started = spark_jobs(
+        spark, lambda: stream_ingest_bars(spark, f"{src}/*.csv.gz", lake, ckpt, tf="day", max_files_per_trigger=20)
+    )
     q.awaitTermination(300)
-    assert _listing_jobs(spark, str(q.runId)) == []  # the stream's own jobs: its polls and batches
+    assert _listing_jobs(spark, started) == []  # the schema probe
+    # the stream's own jobs: its polls and batches
+    assert _listing_jobs(spark, spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))) == []
     got = [r["ticker"] for r in read_lake(spark, lake).select("ticker").collect()]
     assert sorted(got) == [f"T{i:02d}" for i in range(40)]
 

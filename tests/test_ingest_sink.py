@@ -327,17 +327,18 @@ def _exchanges(text: str) -> list[str]:
 
 @pytest.mark.parametrize("correction", [False, True], ids=["new-partition", "correction"])
 def test_sink_write_plan_has_one_exchange(spark, tmp_path, monkeypatch, correction):
-    """Every ``write_lake`` the sink makes (the staged batch, and for a
+    """Every lake write the sink makes (the staged batch, and for a
     correction also the merge) dedups and writes behind one shuffle."""
     lake = str(tmp_path / "lake")
     write_ingest_batch(_bars(spark, _day("AAPL", 2)), 0, lake, tf="minute")
     plans = []
+    write = lake_mod._write
 
-    def spy(df, path, tf="day", mode="overwrite"):
-        plans.append(plan_text(_lake_layout(df, PARTITION_KEYS[tf])))
-        write_lake(df, path, tf=tf, mode=mode)
+    def spy(df, path, keys, mode="overwrite"):
+        plans.append(plan_text(_lake_layout(df, keys)))
+        write(df, path, keys, mode)
 
-    monkeypatch.setattr(ingest_stream, "write_lake", spy)
+    monkeypatch.setattr(lake_mod, "_write", spy)
     day = 2 if correction else 3
     fix = _bars(spark, [("AAPL", f"2024-01-0{day} 14:01:00", 99.0, 7)])
     write_ingest_batch(fix, 1, lake, tf="minute")

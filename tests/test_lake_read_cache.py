@@ -282,7 +282,7 @@ def _merge(spark, lake):
 
 
 def _compact(spark, lake):
-    assert compact_lake(spark, lake, small_file_bytes=0)["partitions_compacted"] == 1
+    assert compact_lake(spark, lake)["partitions_compacted"] == 1
 
 
 def _overwrite(spark, lake):

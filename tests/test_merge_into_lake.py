@@ -3,8 +3,10 @@ replaced wherever they live, inserts land, resident rows in touched
 target partitions survive, untouched partitions are not rewritten, and
 a partition whose only key moved away is removed from disk (also under
 an escaped value). Rows of a touched partition keep every column their
-files carry, the partition columns are the lake's own, and a merge
-starts a bounded number of Spark jobs."""
+files carry, every touched partition is written in the lake's one
+layout, a key column only newer files carry resolves, the partition
+columns are the lake's own, and a merge starts a bounded number of
+Spark jobs."""
 
 from __future__ import annotations
 
@@ -17,7 +19,7 @@ from pyspark.sql import functions as F
 
 from polygon_io_data_ingestion_pipeline_spark.sources import table
 from polygon_io_data_ingestion_pipeline_spark.sources.lake import merge_into_lake, read_lake, write_lake
-from tests.conftest import file_snapshot, spark_jobs
+from tests.conftest import assert_laid_out, file_snapshot, spark_jobs
 
 
 def _docs_lake(spark, tmp_path, sf="/root/testdata/sf0.001"):
@@ -132,6 +134,39 @@ def test_merge_keeps_columns_of_newer_files(spark, tmp_path):
     assert [(r["close"], r["vwap"]) for r in got] == [
         (900.0, None), (101.0, None), (102.0, None), (103.0, 103.5), (104.0, 104.5), (105.0, 105.5),
     ]
+
+
+def test_merge_writes_touched_leaves_in_the_lake_layout(spark, tmp_path):
+    """An update and an insert into a new partition, the insert's rows
+    arriving unsorted over several tasks: each touched leaf is one zstd
+    file sorted by ``datetime``, as ``write_lake`` writes it."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 1, range(5)).unionByName(_bars(spark, "BBB", 2, range(3))), lake)
+    update = _bars(spark, "AAA", 1, [0], close0=900.0)
+    insert = _bars(spark, "CCC", 3, [5, 1, 4, 0, 3, 2], close0=300.0)
+    updates = spark.createDataFrame(update.unionByName(insert).collect(), insert.schema).repartition(3)
+
+    assert merge_into_lake(spark, lake, updates, "datetime") == {"rows_updated": 1, "rows_inserted": 6}
+    for ticker, month in (("AAA", 1), ("CCC", 3)):
+        assert_laid_out(os.path.join(lake, f"ticker={ticker}", "year=2024", f"month={month}"))
+    got = read_lake(spark, lake).filter("ticker = 'AAA'").orderBy("datetime").collect()
+    assert [r["close"] for r in got] == [900.0, 101.0, 102.0, 103.0, 104.0]
+
+
+def test_merge_keys_on_a_column_only_newer_files_carry(spark, tmp_path):
+    """``doc_id`` is in the files of ``ticker=BBB`` only. The merge reads
+    the lake as ``read_lake`` does (every footer merged): the key
+    resolves, and the update's ``doc_id`` is cast to the lake's type
+    (a one-footer read failed on the key and missed the cast)."""
+    lake = str(tmp_path / "lake")
+    write_lake(_bars(spark, "AAA", 1, range(3)), lake)
+    write_lake(_bars(spark, "BBB", 2, range(3)).withColumn("doc_id", F.col("close").cast("long")), lake, mode="append")
+    row = _bars(spark, "BBB", 2, [1], close0=900.0).withColumn("doc_id", F.lit(101))  # an int
+
+    assert merge_into_lake(spark, lake, row, "doc_id") == {"rows_updated": 1, "rows_inserted": 0}
+    got = read_lake(spark, lake).filter("ticker = 'BBB'").orderBy("datetime")
+    assert dict(got.dtypes)["doc_id"] == "bigint"
+    assert [(r["close"], r["doc_id"]) for r in got.collect()] == [(100.0, 100), (901.0, 101), (102.0, 102)]
 
 
 @pytest.mark.parametrize("insert", [False, True], ids=["update", "update-and-insert"])
